@@ -1,11 +1,12 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.Deflater
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.codec.{Bytes, Inflate}
 import graft.engine.Tables
 
 /** Archive member walks — the packaging layer of training shards.
@@ -294,13 +295,8 @@ object Archive {
   final case class ZipEntryMeta(name: String, method: Int, compSize: Long,
       uncompSize: Long, crc32: Long, localOffset: Long)
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xff).toLong | ((b(i + 1) & 0xff).toLong << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  private def u64le(b: Array[Byte], i: Int): Long =
-    u32le(b, i) | (u32le(b, i + 4) << 32)
+  /** Inflate cap per entry: a bomb fails instead of exhausting the heap. */
+  private val MaxEntry = 1 << 28
 
   /** Central-directory walk: locate the EOCD record (PK\05\06 scanned
     * back through the ≤65535-byte comment space, comment length
@@ -314,13 +310,13 @@ object Archive {
     val stop = math.max(0, b.length - 22 - 65535)
     while (eocd < 0 && i >= stop) {
       if (b(i) == 'P' && b(i + 1) == 'K' && b(i + 2) == 5 && b(i + 3) == 6 &&
-        u16le(b, i + 20) == b.length - (i + 22)) eocd = i
+        Bytes.u16le(b, i + 20) == b.length - (i + 22)) eocd = i
       i -= 1
     }
     if (eocd < 0) return None
-    var n: Long = u16le(b, eocd + 10)
-    var cdSize = u32le(b, eocd + 12)
-    var cdOff = u32le(b, eocd + 16)
+    var n: Long = Bytes.u16le(b, eocd + 10)
+    var cdSize = Bytes.u32le(b, eocd + 12)
+    var cdOff = Bytes.u32le(b, eocd + 16)
     if (n == 0xffffL || cdSize == 0xffffffffL || cdOff == 0xffffffffL) {
       // ZIP64 (APPNOTE 4.5): a pinned-0xFFFF field means the real
       // value lives in the ZIP64 EOCD record, found through the
@@ -336,20 +332,20 @@ object Archive {
         // is legal, so pinned-n alone falls back to the classic fields;
         // a pinned size/offset with no locator is genuinely broken.
         if (cdSize == 0xffffffffL || cdOff == 0xffffffffL) return None
-        if (n != u16le(b, eocd + 8)) return None // single-disk only
+        if (n != Bytes.u16le(b, eocd + 8)) return None // single-disk only
         return zipCentral(b, eocd, n, cdSize, cdOff)
       }
-      if (u32le(b, loc + 16) != 1L) return None // single-disk only
-      val z64 = u64le(b, loc + 8)
+      if (Bytes.u32le(b, loc + 16) != 1L) return None // single-disk only
+      val z64 = Bytes.u64le(b, loc + 8)
       if (z64 < 0 || z64 + 56 > loc) return None
       val z = z64.toInt
       if (!(b(z) == 'P' && b(z + 1) == 'K' && b(z + 2) == 6 && b(z + 3) == 6))
         return None
-      n = u64le(b, z + 32) // total entry count
-      if (n != u64le(b, z + 24)) return None // this-disk vs total
-      cdSize = u64le(b, z + 40)
-      cdOff = u64le(b, z + 48)
-    } else if (n != u16le(b, eocd + 8)) return None // single-disk only
+      n = Bytes.u64le(b, z + 32) // total entry count
+      if (n != Bytes.u64le(b, z + 24)) return None // this-disk vs total
+      cdSize = Bytes.u64le(b, z + 40)
+      cdOff = Bytes.u64le(b, z + 48)
+    } else if (n != Bytes.u16le(b, eocd + 8)) return None // single-disk only
     zipCentral(b, eocd, n, cdSize, cdOff)
   }
 
@@ -368,14 +364,14 @@ object Archive {
       val o = off.toInt
       if (!(b(o) == 'P' && b(o + 1) == 'K' && b(o + 2) == 1 && b(o + 3) == 2))
         return None
-      val method = u16le(b, o + 10)
-      val crc = u32le(b, o + 16)
-      var comp = u32le(b, o + 20)
-      var uncomp = u32le(b, o + 24)
-      val nameLen = u16le(b, o + 28)
-      val extraLen = u16le(b, o + 30)
-      val commentLen = u16le(b, o + 32)
-      var localOff = u32le(b, o + 42)
+      val method = Bytes.u16le(b, o + 10)
+      val crc = Bytes.u32le(b, o + 16)
+      var comp = Bytes.u32le(b, o + 20)
+      var uncomp = Bytes.u32le(b, o + 24)
+      val nameLen = Bytes.u16le(b, o + 28)
+      val extraLen = Bytes.u16le(b, o + 30)
+      val commentLen = Bytes.u16le(b, o + 32)
+      var localOff = Bytes.u32le(b, o + 42)
       if (off + 46 + nameLen + extraLen + commentLen > eocd) return None
       if (comp == 0xffffffffL || uncomp == 0xffffffffL ||
         localOff == 0xffffffffL) {
@@ -386,13 +382,13 @@ object Archive {
         val eEnd = eo + extraLen
         var found = false
         while (eo + 4 <= eEnd && !found) {
-          val hid = u16le(b, eo); val hlen = u16le(b, eo + 2)
+          val hid = Bytes.u16le(b, eo); val hlen = Bytes.u16le(b, eo + 2)
           if (eo + 4 + hlen > eEnd) return None
           if (hid == 1) {
             var p = eo + 4
-            if (uncomp == 0xffffffffL) { uncomp = u64le(b, p); p += 8 }
-            if (comp == 0xffffffffL) { comp = u64le(b, p); p += 8 }
-            if (localOff == 0xffffffffL) { localOff = u64le(b, p); p += 8 }
+            if (uncomp == 0xffffffffL) { uncomp = Bytes.u64le(b, p); p += 8 }
+            if (comp == 0xffffffffL) { comp = Bytes.u64le(b, p); p += 8 }
+            if (localOff == 0xffffffffL) { localOff = Bytes.u64le(b, p); p += 8 }
             if (p > eo + 4 + hlen) return None
             found = true
           } else eo += 4 + hlen
@@ -418,8 +414,8 @@ object Archive {
       if (e.localOffset + 30 > b.length) return None
       if (!(b(o) == 'P' && b(o + 1) == 'K' && b(o + 2) == 3 && b(o + 3) == 4))
         return None
-      val nameLen = u16le(b, o + 26)
-      val extraLen = u16le(b, o + 28)
+      val nameLen = Bytes.u16le(b, o + 26)
+      val extraLen = Bytes.u16le(b, o + 28)
       val start = e.localOffset + 30 + nameLen + extraLen
       if (start + e.compSize > b.length) return None
       val data: Array[Byte] = e.method match {
@@ -427,22 +423,8 @@ object Archive {
           if (e.compSize != e.uncompSize) return None
           java.util.Arrays.copyOfRange(b, start.toInt, (start + e.compSize).toInt)
         case 8 =>
-          val inf = new Inflater(true)
-          inf.setInput(b, start.toInt, e.compSize.toInt)
-          val out = new ByteArrayOutputStream(math.max(64, e.uncompSize.toInt))
-          val buf = new Array[Byte](8192)
-          var dummyFed = false
-          while (!inf.finished()) {
-            val nOut = inf.inflate(buf)
-            if (nOut == 0 && inf.needsInput()) {
-              if (dummyFed) throw new RuntimeException("trunc")
-              inf.setInput(Array[Byte](0)); dummyFed = true
-            }
-            out.write(buf, 0, nOut)
-            if (out.size() > e.uncompSize) throw new RuntimeException("overrun")
-          }
-          inf.end()
-          out.toByteArray
+          Inflate(b, start.toInt, e.compSize.toInt, MaxEntry, raw = true,
+            exact = e.uncompSize).getOrElse(return None).bytes
         case 12 => // bzip2 (APPNOTE 4.4.5): payload is one .bz2 stream
           Bzip2.bunzip2(java.util.Arrays.copyOfRange(b, start.toInt,
             (start + e.compSize).toInt)) match {
@@ -452,10 +434,10 @@ object Archive {
         case 14 => // LZMA (APPNOTE 5.8): 4-byte version/size hdr + props
           if (e.compSize < 9) return None
           val o2 = start.toInt
-          val propSize = u16le(b, o2 + 2)
+          val propSize = Bytes.u16le(b, o2 + 2)
           if (propSize != 5 || e.compSize < 4 + 5) return None
           val props = b(o2 + 4) & 0xff
-          val dictSize = u32le(b, o2 + 5)
+          val dictSize = Bytes.u32le(b, o2 + 5)
           XzCodec.lzmaRawDecode(b, o2 + 9, (start + e.compSize).toInt,
             props, dictSize, e.uncompSize.toInt) match {
             case Some(d) => d
@@ -463,8 +445,8 @@ object Archive {
           }
         case _ => return None // no other methods emitted or accepted
       }
-      val crc = new CRC32(); crc.update(data)
-      if (data.length.toLong == e.uncompSize && crc.getValue == e.crc32)
+      val crc = Bytes.crc32(data)
+      if (data.length.toLong == e.uncompSize && crc == e.crc32)
         Some(data)
       else None
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -474,13 +456,9 @@ object Archive {
     * real CRCs, real deflate streams, central dir + EOCD. */
   def encodeZip(entries: Seq[(String, Array[Byte], Boolean)]): Array[Byte] = {
     val out = new ByteArrayOutputStream(entries.map(_._2.length + 128).sum + 64)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      le16((v & 0xffff).toInt); le16(((v >> 16) & 0xffff).toInt)
-    }
     val metas = entries.map { case (name, payload, deflate) =>
       val nb = name.getBytes("UTF-8")
-      val crc = new CRC32(); crc.update(payload)
+      val crc = Bytes.crc32(payload)
       val comp =
         if (!deflate) payload
         else {
@@ -494,30 +472,32 @@ object Archive {
         }
       val localOff = out.size().toLong
       out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(20); le16(0); le16(if (deflate) 8 else 0)
-      le16(0); le16(0x21) // fixed DOS time/date (1980-01-01 00:01)
-      le32(crc.getValue); le32(comp.length.toLong); le32(payload.length.toLong)
-      le16(nb.length); le16(0)
+      Bytes.le16(out, 20); Bytes.le16(out, 0); Bytes.le16(out, if (deflate) 8 else 0)
+      Bytes.le16(out, 0); Bytes.le16(out, 0x21) // fixed DOS time/date (1980-01-01 00:01)
+      Bytes.le32(out, crc); Bytes.le32(out, comp.length.toLong)
+      Bytes.le32(out, payload.length.toLong)
+      Bytes.le16(out, nb.length); Bytes.le16(out, 0)
       out.write(nb, 0, nb.length)
       out.write(comp, 0, comp.length)
       ZipEntryMeta(name, if (deflate) 8 else 0, comp.length.toLong,
-        payload.length.toLong, crc.getValue, localOff)
+        payload.length.toLong, crc, localOff)
     }
     val cdOff = out.size().toLong
     metas.foreach { m =>
       val nb = m.name.getBytes("UTF-8")
       out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(20); le16(20); le16(0); le16(m.method)
-      le16(0); le16(0x21)
-      le32(m.crc32); le32(m.compSize); le32(m.uncompSize)
-      le16(nb.length); le16(0); le16(0); le16(0); le16(0); le32(0)
-      le32(m.localOffset)
+      Bytes.le16(out, 20); Bytes.le16(out, 20); Bytes.le16(out, 0); Bytes.le16(out, m.method)
+      Bytes.le16(out, 0); Bytes.le16(out, 0x21)
+      Bytes.le32(out, m.crc32); Bytes.le32(out, m.compSize); Bytes.le32(out, m.uncompSize)
+      Bytes.le16(out, nb.length); Bytes.le16(out, 0); Bytes.le16(out, 0); Bytes.le16(out, 0)
+      Bytes.le16(out, 0); Bytes.le32(out, 0)
+      Bytes.le32(out, m.localOffset)
       out.write(nb, 0, nb.length)
     }
     val cdSize = out.size().toLong - cdOff
     out.write('P'); out.write('K'); out.write(5); out.write(6)
-    le16(0); le16(0); le16(metas.size); le16(metas.size)
-    le32(cdSize); le32(cdOff); le16(0)
+    Bytes.le16(out, 0); Bytes.le16(out, 0); Bytes.le16(out, metas.size); Bytes.le16(out, metas.size)
+    Bytes.le32(out, cdSize); Bytes.le32(out, cdOff); Bytes.le16(out, 0)
     out.toByteArray
   }
 
@@ -534,11 +514,6 @@ object Archive {
     * no EOS marker so general-purpose bit 1 stays 0). */
   def encodeZipMethods(entries: Seq[(String, Array[Byte], Int)]): Array[Byte] = {
     val out = new ByteArrayOutputStream(512)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      var k = 0
-      while (k < 4) { out.write(((v >> (8 * k)) & 0xff).toInt); k += 1 }
-    }
     val centrals = Vector.newBuilder[(String, Int, Long, Long, Long, Long)]
     entries.foreach { case (name, data, method) =>
       val comp: Array[Byte] = method match {
@@ -555,49 +530,45 @@ object Archive {
           hdr.toByteArray ++ raw
         case m => throw new IllegalArgumentException(s"method $m")
       }
-      val crc = new CRC32(); crc.update(data)
+      val crc = Bytes.crc32(data)
       val localOff = out.size.toLong
       out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(63); le16(0); le16(method)
-      le16(0); le16(0) // time, date
-      le32(crc.getValue); le32(comp.length.toLong); le32(data.length.toLong)
+      Bytes.le16(out, 63); Bytes.le16(out, 0); Bytes.le16(out, method)
+      Bytes.le16(out, 0); Bytes.le16(out, 0) // time, date
+      Bytes.le32(out, crc); Bytes.le32(out, comp.length.toLong); Bytes.le32(out, data.length.toLong)
       // length fields count UTF-8 BYTES, not UTF-16 chars
       val nb = name.getBytes("UTF-8")
-      le16(nb.length); le16(0)
+      Bytes.le16(out, nb.length); Bytes.le16(out, 0)
       out.write(nb, 0, nb.length)
       out.write(comp, 0, comp.length)
-      centrals += ((name, method, crc.getValue, comp.length.toLong,
+      centrals += ((name, method, crc, comp.length.toLong,
         data.length.toLong, localOff))
     }
     val cdStart = out.size.toLong
     centrals.result().foreach { case (name, method, crc, cs, us, off) =>
       out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(63); le16(63); le16(0); le16(method)
-      le16(0); le16(0)
-      le32(crc); le32(cs); le32(us)
+      Bytes.le16(out, 63); Bytes.le16(out, 63); Bytes.le16(out, 0); Bytes.le16(out, method)
+      Bytes.le16(out, 0); Bytes.le16(out, 0)
+      Bytes.le32(out, crc); Bytes.le32(out, cs); Bytes.le32(out, us)
       val nb = name.getBytes("UTF-8")
-      le16(nb.length); le16(0); le16(0)
-      le16(0); le16(0); le32(0)
-      le32(off)
+      Bytes.le16(out, nb.length); Bytes.le16(out, 0); Bytes.le16(out, 0)
+      Bytes.le16(out, 0); Bytes.le16(out, 0); Bytes.le32(out, 0)
+      Bytes.le32(out, off)
       out.write(nb, 0, nb.length)
     }
     val cdSize = out.size.toLong - cdStart
     out.write('P'); out.write('K'); out.write(5); out.write(6)
-    le16(0); le16(0); le16(entries.length); le16(entries.length)
-    le32(cdSize); le32(cdStart); le16(0)
+    Bytes.le16(out, 0); Bytes.le16(out, 0); Bytes.le16(out, entries.length)
+    Bytes.le16(out, entries.length)
+    Bytes.le32(out, cdSize); Bytes.le32(out, cdStart); Bytes.le16(out, 0)
     out.toByteArray
   }
 
   def encodeZip64(entries: Seq[(String, Array[Byte], Boolean)]): Array[Byte] = {
     val out = new ByteArrayOutputStream(entries.map(_._2.length + 192).sum + 160)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      le16((v & 0xffff).toInt); le16(((v >> 16) & 0xffff).toInt)
-    }
-    def le64(v: Long): Unit = { le32(v & 0xffffffffL); le32(v >>> 32) }
     val metas = entries.map { case (name, payload, deflate) =>
       val nb = name.getBytes("UTF-8")
-      val crc = new CRC32(); crc.update(payload)
+      val crc = Bytes.crc32(payload)
       val comp =
         if (!deflate) payload
         else {
@@ -611,43 +582,46 @@ object Archive {
         }
       val localOff = out.size().toLong
       out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(45); le16(0); le16(if (deflate) 8 else 0) // version 4.5
-      le16(0); le16(0x21)
-      le32(crc.getValue); le32(0xffffffffL); le32(0xffffffffL)
-      le16(nb.length); le16(20) // zip64 extra: id+len+two u64s
+      Bytes.le16(out, 45); Bytes.le16(out, 0); Bytes.le16(out, if (deflate) 8 else 0) // version 4.5
+      Bytes.le16(out, 0); Bytes.le16(out, 0x21)
+      Bytes.le32(out, crc); Bytes.le32(out, 0xffffffffL); Bytes.le32(out, 0xffffffffL)
+      Bytes.le16(out, nb.length); Bytes.le16(out, 20) // zip64 extra: id+len+two u64s
       out.write(nb, 0, nb.length)
-      le16(1); le16(16); le64(payload.length.toLong); le64(comp.length.toLong)
+      Bytes.le16(out, 1); Bytes.le16(out, 16); Bytes.le64(out, payload.length.toLong)
+      Bytes.le64(out, comp.length.toLong)
       out.write(comp, 0, comp.length)
       ZipEntryMeta(name, if (deflate) 8 else 0, comp.length.toLong,
-        payload.length.toLong, crc.getValue, localOff)
+        payload.length.toLong, crc, localOff)
     }
     val cdOff = out.size().toLong
     metas.foreach { m =>
       val nb = m.name.getBytes("UTF-8")
       out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(45); le16(45); le16(0); le16(m.method)
-      le16(0); le16(0x21)
-      le32(m.crc32); le32(0xffffffffL); le32(0xffffffffL)
-      le16(nb.length); le16(28); le16(0); le16(0); le16(0); le32(0)
-      le32(0xffffffffL)
+      Bytes.le16(out, 45); Bytes.le16(out, 45); Bytes.le16(out, 0); Bytes.le16(out, m.method)
+      Bytes.le16(out, 0); Bytes.le16(out, 0x21)
+      Bytes.le32(out, m.crc32); Bytes.le32(out, 0xffffffffL); Bytes.le32(out, 0xffffffffL)
+      Bytes.le16(out, nb.length); Bytes.le16(out, 28); Bytes.le16(out, 0); Bytes.le16(out, 0)
+      Bytes.le16(out, 0); Bytes.le32(out, 0)
+      Bytes.le32(out, 0xffffffffL)
       out.write(nb, 0, nb.length)
-      le16(1); le16(24)
-      le64(m.uncompSize); le64(m.compSize); le64(m.localOffset)
+      Bytes.le16(out, 1); Bytes.le16(out, 24)
+      Bytes.le64(out, m.uncompSize); Bytes.le64(out, m.compSize); Bytes.le64(out, m.localOffset)
     }
     val cdSize = out.size().toLong - cdOff
     val z64Off = out.size().toLong
     // ZIP64 EOCD record (56 bytes, "size of record" excludes sig+size)
     out.write('P'); out.write('K'); out.write(6); out.write(6)
-    le64(44); le16(45); le16(45); le32(0); le32(0)
-    le64(metas.size.toLong); le64(metas.size.toLong)
-    le64(cdSize); le64(cdOff)
+    Bytes.le64(out, 44); Bytes.le16(out, 45); Bytes.le16(out, 45); Bytes.le32(out, 0)
+    Bytes.le32(out, 0)
+    Bytes.le64(out, metas.size.toLong); Bytes.le64(out, metas.size.toLong)
+    Bytes.le64(out, cdSize); Bytes.le64(out, cdOff)
     // ZIP64 EOCD locator
     out.write('P'); out.write('K'); out.write(6); out.write(7)
-    le32(0); le64(z64Off); le32(1)
+    Bytes.le32(out, 0); Bytes.le64(out, z64Off); Bytes.le32(out, 1)
     // classic EOCD, counts/offsets pinned
     out.write('P'); out.write('K'); out.write(5); out.write(6)
-    le16(0); le16(0); le16(0xffff); le16(0xffff)
-    le32(0xffffffffL); le32(0xffffffffL); le16(0)
+    Bytes.le16(out, 0); Bytes.le16(out, 0); Bytes.le16(out, 0xffff); Bytes.le16(out, 0xffff)
+    Bytes.le32(out, 0xffffffffL); Bytes.le32(out, 0xffffffffL); Bytes.le16(out, 0)
     out.toByteArray
   }
 

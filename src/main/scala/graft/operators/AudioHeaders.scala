@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.codec.Bytes
+
 /** Pure-JVM audio header codec: parse (and, for fixtures, emit) the
   * metadata-bearing prefix of WAV (RIFF/WAVE) streams — the audio
   * sibling of [[ImageHeaders]], no codec libraries, no native deps.
@@ -27,11 +29,6 @@ object AudioHeaders {
   final case class WavMeta(channels: Int, sampleRate: Int,
       bitsPerSample: Int, nSamples: Long)
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xff).toLong | ((b(i + 1) & 0xff).toLong << 8) |
-      ((b(i + 2) & 0xff).toLong << 16) | ((b(i + 3) & 0xff).toLong << 24)
   private def tag(b: Array[Byte], i: Int): String =
     new String(b, i, 4, "US-ASCII")
 
@@ -43,14 +40,14 @@ object AudioHeaders {
     var dataBytes: Option[Long] = None
     while (off + 8 <= b.length && (fmt.isEmpty || dataBytes.isEmpty)) {
       val id = tag(b, off)
-      val size = u32le(b, off + 4)
+      val size = Bytes.u32le(b, off + 4)
       if (size < 0) return None
       if (id == "fmt ") {
         if (size < 16 || off + 8 + 16 > b.length) return None
-        val ch = u16le(b, off + 10)
-        val rate = u32le(b, off + 12)
-        val block = u16le(b, off + 20)
-        val bits = u16le(b, off + 22)
+        val ch = Bytes.u16le(b, off + 10)
+        val rate = Bytes.u32le(b, off + 12)
+        val block = Bytes.u16le(b, off + 20)
+        val bits = Bytes.u16le(b, off + 22)
         if (ch <= 0 || rate <= 0 || rate > Int.MaxValue || block <= 0)
           return None
         fmt = Some((ch, rate.toInt, bits, block))
@@ -254,7 +251,7 @@ object AudioHeaders {
     if (b == null || b.length < 8) return None
     if (b(0) != 'f' || b(1) != 'L' || b(2) != 'a' || b(3) != 'C') return None
     if ((b(4) & 0x7f) != 0) return None // first block must be STREAMINFO
-    val len = ((b(5) & 0xff) << 16) | ((b(6) & 0xff) << 8) | (b(7) & 0xff)
+    val len = Bytes.u24be(b, 5)
     if (len < 34 || 8 + 34 > b.length) return None
     val p = 8 // STREAMINFO payload; packed fields start at byte 10
     def u(i: Int): Int = b(p + i) & 0xff
@@ -318,12 +315,6 @@ object AudioHeaders {
   final case class OggMeta(codec: String, channels: Int, sampleRate: Int,
       preSkip: Int, nPages: Long, nSamples: Long)
 
-  private def i64le(b: Array[Byte], i: Int): Long = {
-    var v = 0L; var k = 7
-    while (k >= 0) { v = (v << 8) | (b(i + k) & 0xff); k -= 1 }
-    v
-  }
-
   /** Ogg page CRC: CRC-32 poly 0x04c11db7, init 0, NO reflection, NO
     * final xor (RFC 3533 appendix A) — deliberately not java.util.zip's
     * reflected CRC-32. Computed over the whole page with the CRC field
@@ -372,10 +363,10 @@ object AudioHeaders {
         b(o + 3) != 'S') return None
       if (b(o + 4) != 0) return None // stream structure version
       val hdrType = b(o + 5) & 0xff
-      val granule = i64le(b, o + 6)
-      val pageSerial = u32le(b, o + 14)
-      val pageSeq = u32le(b, o + 18)
-      val crc = u32le(b, o + 22)
+      val granule = Bytes.u64le(b, o + 6)
+      val pageSerial = Bytes.u32le(b, o + 14)
+      val pageSeq = Bytes.u32le(b, o + 18)
+      val crc = Bytes.u32le(b, o + 22)
       val nSegs = b(o + 26) & 0xff
       if (off + 27 + nSegs > b.length) return None
       var payloadLen = 0
@@ -398,21 +389,20 @@ object AudioHeaders {
     }
     if (off != b.length || seq == 0L || !sawEos) return None
     val p = firstPayload
-    def u8(i: Int) = p(i) & 0xff
     if (p.length >= 19 && new String(p, 0, 8, "US-ASCII") == "OpusHead") {
-      if (u8(8) != 1) return None // OpusHead version
-      val ch = u8(9)
-      val preSkip = (p(10) & 0xff) | ((p(11) & 0xff) << 8)
-      val inRate = u32le(p, 12)
+      if (Bytes.u8(p, 8) != 1) return None // OpusHead version
+      val ch = Bytes.u8(p, 9)
+      val preSkip = Bytes.u16le(p, 10)
+      val inRate = Bytes.u32le(p, 12)
       val samples = lastGranule - preSkip
       if (ch <= 0 || inRate <= 0 || inRate > Int.MaxValue || samples < 0)
         return None
       Some(OggMeta("opus", ch, inRate.toInt, preSkip, seq, samples))
     } else if (p.length >= 30 && p(0) == 1 &&
       new String(p, 1, 6, "US-ASCII") == "vorbis") {
-      if (u32le(p, 7) != 0L) return None // vorbis version must be 0
-      val ch = u8(11)
-      val rate = u32le(p, 12)
+      if (Bytes.u32le(p, 7) != 0L) return None // vorbis version must be 0
+      val ch = Bytes.u8(p, 11)
+      val rate = Bytes.u32le(p, 12)
       if (ch <= 0 || rate <= 0 || rate > Int.MaxValue || lastGranule < 0)
         return None
       Some(OggMeta("vorbis", ch, rate.toInt, 0, seq, lastGranule))
@@ -532,19 +522,19 @@ object AudioHeaders {
       end: Int): Option[(String, Int, Map[String, String])] = {
     var off = off0.toLong
     if (off + 4 > end) return None
-    val vendorLen = u32le(b, off.toInt)
+    val vendorLen = Bytes.u32le(b, off.toInt)
     if (off + 4 + vendorLen > end) return None
     val vendor = new String(b, (off + 4).toInt, vendorLen.toInt, "UTF-8")
     off += 4 + vendorLen
     if (off + 4 > end) return None
-    val n = u32le(b, off.toInt)
+    val n = Bytes.u32le(b, off.toInt)
     if (n > Int.MaxValue) return None
     off += 4
     var fields = Map.empty[String, String]
     var i = 0L
     while (i < n) {
       if (off + 4 > end) return None
-      val len = u32le(b, off.toInt)
+      val len = Bytes.u32le(b, off.toInt)
       if (off + 4 + len > end) return None
       val c = new String(b, (off + 4).toInt, len.toInt, "UTF-8")
       val eq = c.indexOf('=')
@@ -564,16 +554,12 @@ object AudioHeaders {
   def vorbisCommentBody(vendor: String,
       comments: Seq[(String, String)]): Array[Byte] = {
     val out = new ByteArrayOutputStream(64)
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
     val vb = vendor.getBytes("UTF-8")
-    le32(vb.length.toLong); out.write(vb, 0, vb.length)
-    le32(comments.length.toLong)
+    Bytes.le32(out, vb.length.toLong); out.write(vb, 0, vb.length)
+    Bytes.le32(out, comments.length.toLong)
     comments.foreach { case (k, v) =>
       val cb = s"$k=$v".getBytes("UTF-8")
-      le32(cb.length.toLong); out.write(cb, 0, cb.length)
+      Bytes.le32(out, cb.length.toLong); out.write(cb, 0, cb.length)
     }
     out.toByteArray
   }
@@ -629,8 +615,7 @@ object AudioHeaders {
         val hdr = b(off.toInt) & 0xff
         last = (hdr & 0x80) != 0
         val typ = hdr & 0x7f
-        val len = ((b(off.toInt + 1) & 0xff) << 16) |
-          ((b(off.toInt + 2) & 0xff) << 8) | (b(off.toInt + 3) & 0xff)
+        val len = Bytes.u24be(b, off.toInt + 1)
         if (off + 4 + len > b.length) return None
         if (typ == 4)
           return parseVorbisBody(b, off.toInt + 4, (off + 4 + len).toInt)
@@ -678,30 +663,25 @@ object AudioHeaders {
       s"data chunk size ${nSamples * block} exceeds u32")
     val out = new ByteArrayOutputStream(note.length + 64)
     def ascii(s: String): Unit = out.write(s.getBytes("US-ASCII"), 0, 4)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
     // a LIST payload starts with a mandatory 4-byte list-type ('INFO');
     // omitting it is nonstandard RIFF that third-party tools reject even
     // though a hop-by-size walker tolerates it. Payload = type + note.
     val listPayload = 4 + note.length
     val noteChunk = 8 + listPayload + (listPayload & 1)
     val riffSize = 4 + noteChunk + (8 + 16) + 8 // WAVE + LIST + fmt + data hdr
-    ascii("RIFF"); le32(riffSize); ascii("WAVE")
-    ascii("LIST"); le32(listPayload)
+    ascii("RIFF"); Bytes.le32(out, riffSize); ascii("WAVE")
+    ascii("LIST"); Bytes.le32(out, listPayload)
     ascii("INFO")
     out.write(note, 0, note.length)
     if ((listPayload & 1) == 1) out.write(0) // RIFF even padding
-    ascii("fmt "); le32(16)
-    le16(1) // PCM
-    le16(channels)
-    le32(sampleRate)
-    le32(sampleRate.toLong * block) // byte rate
-    le16(block)
-    le16(bitsPerSample)
-    ascii("data"); le32(nSamples * block) // declared, not carried
+    ascii("fmt "); Bytes.le32(out, 16)
+    Bytes.le16(out, 1) // PCM
+    Bytes.le16(out, channels)
+    Bytes.le32(out, sampleRate)
+    Bytes.le32(out, sampleRate.toLong * block) // byte rate
+    Bytes.le16(out, block)
+    Bytes.le16(out, bitsPerSample)
+    ascii("data"); Bytes.le32(out, nSamples * block) // declared, not carried
     out.toByteArray
   }
 }

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.Bytes
 import graft.engine.Tables
 
 /** Avro Object Container File sniff — the remaining self-describing
@@ -23,7 +24,7 @@ object Avro {
 
   /** Zigzag-varint at `off` (Avro's long encoding): (value, next). */
   private[operators] def zigzagVarint(b: Array[Byte], off: Int): Option[(Long, Int)] =
-    Protobuf.varint(b, off).map { case (u, next) =>
+    Bytes.varint(b, off).map { case (u, next) =>
       ((u >>> 1) ^ -(u & 1L), next)
     }
 
@@ -84,7 +85,7 @@ object Avro {
   // --------------------------------------------------- fixture emitter
 
   private def putZigzag(out: ByteArrayOutputStream, v: Long): Unit =
-    Protobuf.putVarint(out, (v << 1) ^ (v >> 63))
+    Bytes.putVarint(out, (v << 1) ^ (v >> 63))
 
   private def putBytes(out: ByteArrayOutputStream, b: Array[Byte]): Unit = {
     putZigzag(out, b.length.toLong); out.write(b, 0, b.length)

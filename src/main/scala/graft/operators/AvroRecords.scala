@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.{Bytes, Inflate}
 import graft.engine.Tables
 import Ipynb.{parseJson, JArr, JObj, JStr, JVal}
 
@@ -165,37 +166,15 @@ object AvroRecords {
     }
   }
 
-  private def inflateRaw(b: Array[Byte]): Option[Array[Byte]] =
-    try {
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(b)
-      val out = new ByteArrayOutputStream(b.length * 2)
-      val buf = new Array[Byte](8192)
-      var stuck = false
-      while (!inf.finished() && !stuck) {
-        val k = inf.inflate(buf)
-        if (k == 0 && inf.needsInput()) stuck = true else out.write(buf, 0, k)
-        if (out.size > (1 << 26)) stuck = true
-      }
-      val ok = inf.finished()
-      inf.end()
-      if (ok) Some(out.toByteArray) else None
-    } catch { case _: Exception => None }
-
   private def decodeBlockPayload(codec: String,
       b: Array[Byte]): Option[Array[Byte]] = codec match {
     case "null"    => Some(b)
-    case "deflate" => inflateRaw(b)
+    case "deflate" => Inflate.raw(b, 0, b.length, 1 << 26)
     case "snappy" =>
       if (b.length < 4) return None
       val comp = java.util.Arrays.copyOfRange(b, 0, b.length - 4)
       SnappyCodec.decompressRaw(comp, 1 << 26).filter { raw =>
-        val crc = new java.util.zip.CRC32
-        crc.update(raw)
-        val want = ((b(b.length - 4) & 0xffL) << 24) |
-          ((b(b.length - 3) & 0xffL) << 16) |
-          ((b(b.length - 2) & 0xffL) << 8) | (b(b.length - 1) & 0xffL)
-        crc.getValue == want
+        Bytes.crc32(raw) == Bytes.u32be(b, b.length - 4)
       }
     case _ => None
   }
@@ -281,7 +260,7 @@ object AvroRecords {
   // --------------------------------------------------- fixture emitter
 
   private def putZig(out: ByteArrayOutputStream, v: Long): Unit =
-    Protobuf.putVarint(out, (v << 1) ^ (v >> 63))
+    Bytes.putVarint(out, (v << 1) ^ (v >> 63))
 
   private def encodeValue(out: ByteArrayOutputStream, t: AType,
       v: AV): Unit = (t, v) match {
@@ -352,12 +331,9 @@ object AvroRecords {
         case "deflate" => deflateRaw(raw)
         case "snappy" =>
           val comp = SnappyCodec.compressRawLiteral(raw)
-          val crc = new java.util.zip.CRC32
-          crc.update(raw)
-          val v = crc.getValue
-          comp ++ Array[Byte](((v >>> 24) & 0xff).toByte,
-            ((v >>> 16) & 0xff).toByte, ((v >>> 8) & 0xff).toByte,
-            (v & 0xff).toByte)
+          val crc = new Array[Byte](4)
+          Bytes.putBe32(crc, 0, Bytes.crc32(raw))
+          comp ++ crc
         case _ => throw new IllegalArgumentException(codec)
       }
       putZig(out, recs.length.toLong)

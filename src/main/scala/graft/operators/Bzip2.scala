@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.{MsbBitReader, MsbBitWriter}
 import graft.engine.Tables
 
 /** bzip2 CODEC — pure JVM, from the public format description (the
@@ -73,53 +74,6 @@ object Bzip2 {
     def result: Int = ~v
   }
 
-  // ---- MSB-first bit IO ----------------------------------------------
-
-  private final class BitReader(b: Array[Byte]) {
-    var pos = 0L // bit position
-    def bits(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        val byteAt = (pos >>> 3).toInt
-        if (byteAt >= b.length) fail()
-        v = (v << 1) | ((b(byteAt) >>> (7 - (pos & 7).toInt)) & 1)
-        pos += 1
-        k += 1
-      }
-      v
-    }
-    def bit(): Int = bits(1)
-    def bitsLong(n: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < n) { v = (v << 1) | bit(); k += 1 }
-      v
-    }
-    def atByteEndOrLess: Boolean = ((pos + 7) >>> 3) <= b.length
-  }
-
-  private final class BitWriter(out: ByteArrayOutputStream) {
-    private var acc = 0
-    private var nAcc = 0
-    def write(v: Int, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) {
-        acc = (acc << 1) | ((v >>> k) & 1)
-        nAcc += 1
-        if (nAcc == 8) { out.write(acc); acc = 0; nAcc = 0 }
-        k -= 1
-      }
-    }
-    def writeLong(v: Long, n: Int): Unit = {
-      write((v >>> 32).toInt, math.max(0, n - 32))
-      write((v & 0xffffffffL).toInt, math.min(32, n))
-    }
-    def flush(): Unit = {
-      if (nAcc > 0) { out.write(acc << (8 - nAcc)); acc = 0; nAcc = 0 }
-    }
-  }
-
   private val BlockMagic = 0x314159265359L
   private val EosMagic = 0x177245385090L
 
@@ -131,9 +85,9 @@ object Bzip2 {
   // ---- decode ---------------------------------------------------------
 
   /** Decode one block (magic already consumed). Returns block CRC. */
-  private def decodeBlock(r: BitReader, out: ByteArrayOutputStream,
+  private def decodeBlock(r: MsbBitReader, out: ByteArrayOutputStream,
       blockSize100k: Int, maxOut: Int): Int = {
-    val storedCrc = r.bits(32)
+    val storedCrc = r.bits(32).toInt
     // legacy randomised blocks: deprecated since bzip2 0.9.5, but
     // Hadoop's CBZip2OutputStream (Spark's own .bz2 codec) still
     // EMITS them for highly repetitive blocks, so real Spark-written
@@ -141,14 +95,14 @@ object Bzip2 {
     // data (bzip2's randtable.c); we read it off the Spark classpath
     // (BZip2Constants.rNums) rather than re-typing 512 literals.
     val randomised = r.bit() == 1
-    val origPtr = r.bits(24)
+    val origPtr = r.bits(24).toInt
     // symbol map
     val used = new Array[Boolean](256)
-    val big = r.bits(16)
+    val big = r.bits(16).toInt
     var i = 0
     while (i < 16) {
       if ((big & (0x8000 >>> i)) != 0) {
-        val small = r.bits(16)
+        val small = r.bits(16).toInt
         var j = 0
         while (j < 16) {
           if ((small & (0x8000 >>> j)) != 0) used(i * 16 + j) = true
@@ -161,9 +115,9 @@ object Bzip2 {
     val nUsed = seq.length
     if (nUsed == 0) fail()
     val alpha = nUsed + 2
-    val nGroups = r.bits(3)
+    val nGroups = r.bits(3).toInt
     if (nGroups < 2 || nGroups > 6) fail()
-    val nSelectors = r.bits(15)
+    val nSelectors = r.bits(15).toInt
     if (nSelectors < 1) fail()
     // selectors: MTF over group ids
     val selMtf = Array.tabulate(nGroups)(identity)
@@ -183,7 +137,7 @@ object Bzip2 {
     val lens = Array.ofDim[Int](nGroups, alpha)
     var g = 0
     while (g < nGroups) {
-      var cur = r.bits(5)
+      var cur = r.bits(5).toInt
       var s = 0
       while (s < alpha) {
         var moving = true
@@ -261,7 +215,7 @@ object Bzip2 {
       groupPos -= 1
       val gg = selectors(groupNo)
       var zn = minLens(gg)
-      var zvec = r.bits(zn)
+      var zvec = r.bits(zn).toInt
       while (zvec > limit(gg)(zn)) {
         zn += 1
         if (zn > 20) fail()
@@ -368,30 +322,29 @@ object Bzip2 {
     try {
       if (b == null || b.length < 14) return None
       val out = new ByteArrayOutputStream(math.min(b.length * 4, 1 << 16))
-      val r = new BitReader(b)
+      val r = new MsbBitReader(b)
       var streams = 0
       var done = false
       while (!done) {
         if (r.bits(8) != 'B' || r.bits(8) != 'Z' || r.bits(8) != 'h') fail()
-        val level = r.bits(8) - '0'
+        val level = r.bits(8).toInt - '0'
         if (level < 1 || level > 9) fail()
         var combined = 0
         var eos = false
         while (!eos) {
-          val magic = r.bitsLong(48)
+          val magic = r.bits(48)
           if (magic == BlockMagic) {
             val c = decodeBlock(r, out, level, maxOut)
             combined = ((combined << 1) | (combined >>> 31)) ^ c
           } else if (magic == EosMagic) {
-            val storedCombined = r.bits(32)
+            val storedCombined = r.bits(32).toInt
             if (storedCombined != combined) fail()
             eos = true
           } else fail()
         }
         streams += 1
         // next stream begins byte-aligned
-        r.pos = (r.pos + 7) & ~7L
-        if ((r.pos >>> 3) >= b.length) done = true
+        if (r.align() >= b.length) done = true
       }
       if (streams == 0) fail()
       Some(out.toByteArray)
@@ -473,7 +426,7 @@ object Bzip2 {
   def bzip2Compress(data: Array[Byte], level: Int = 9): Array[Byte] = {
     require(level >= 1 && level <= 9)
     val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    val w = new BitWriter(out)
+    val w = new MsbBitWriter(out)
     w.write('B', 8); w.write('Z', 8); w.write('h', 8)
     w.write('0' + level, 8)
     val rawLimit = level * 100000 - 20
@@ -496,14 +449,14 @@ object Bzip2 {
       combined = ((combined << 1) | (combined >>> 31)) ^ crc.result
       off += take
     }
-    w.writeLong(EosMagic, 48)
+    w.write(EosMagic, 48)
     w.write(combined, 32)
-    w.flush()
+    w.align()
     out.toByteArray
   }
 
   /** Encode one block from its RLE1-packed form. */
-  private def encodeBlock(w: BitWriter, packed: Array[Byte],
+  private def encodeBlock(w: MsbBitWriter, packed: Array[Byte],
       raw: Array[Byte], rawOff: Int, rawLen: Int): Unit = {
     val n = packed.length
     // BWT by rotation sort (O(n log n * cmp) — fixture-scale blocks)
@@ -573,7 +526,7 @@ object Bzip2 {
     val codes = assignCodes(lens)
     val nSelectors = (syms.length + 49) / 50
     // block header
-    w.writeLong(BlockMagic, 48)
+    w.write(BlockMagic, 48)
     val crc = new Crc
     i = rawOff
     while (i < rawOff + rawLen) { crc.update(raw(i)); i += 1 }

@@ -1,7 +1,9 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.Deflater
+
+import graft.codec.{Bytes, Inflate}
 
 /** gzip (RFC 1952) member codec — crawl blobs and WARC records arrive
   * gzip-wrapped, so the ingestion path needs the header walk (what is
@@ -24,11 +26,8 @@ object Compression {
   final case class GzipMeta(mtime: Long, os: Int, fname: Option[String],
       fcomment: Option[String], isize: Long)
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xff).toLong | ((b(i + 1) & 0xff).toLong << 8) |
-      ((b(i + 2) & 0xff).toLong << 16) | ((b(i + 3) & 0xff).toLong << 24)
+  /** Inflate cap per member: a bomb fails instead of exhausting the heap. */
+  private val MaxOut = 1 << 28
 
   /** Header + trailer walk of a SINGLE-member buffer, no inflate:
     * magic, flag-driven optional field hops, declared ISIZE off the
@@ -36,7 +35,7 @@ object Compression {
     * bits, or truncation. */
   def decodeGzipHeader(b: Array[Byte]): Option[GzipMeta] =
     parseHeader(b, 0).map { case (mtime, os, fn, fc, _) =>
-      GzipMeta(mtime, os, fn, fc, u32le(b, b.length - 4))
+      GzipMeta(mtime, os, fn, fc, Bytes.u32le(b, b.length - 4))
     }
 
   /** Header fields + the offset where the deflate stream starts, for
@@ -49,12 +48,12 @@ object Compression {
     if ((b(off0 + 2) & 0xff) != 8) return None // deflate is the only CM
     val flg = b(off0 + 3) & 0xff
     if ((flg & 0xe0) != 0) return None // reserved bits must be zero
-    val mtime = u32le(b, off0 + 4)
+    val mtime = Bytes.u32le(b, off0 + 4)
     val os = b(off0 + 9) & 0xff
     var off = off0 + 10
     if ((flg & 0x04) != 0) { // FEXTRA
       if (off + 2 > b.length) return None
-      val xlen = u16le(b, off)
+      val xlen = Bytes.u16le(b, off)
       off += 2 + xlen
       if (off > b.length) return None
     }
@@ -88,41 +87,17 @@ object Compression {
   def gunzipMember(b: Array[Byte], off: Int): Option[
       (Array[Byte], GzipMeta, Int)] =
     parseHeader(b, off).flatMap { case (mtime, os, fn, fc, start) =>
-      try {
-        val inf = new Inflater(true) // raw deflate
-        inf.setInput(b, start, b.length - 8 - start)
-        val out = new ByteArrayOutputStream(64)
-        val buf = new Array[Byte](8192)
-        // documented Inflater quirk: nowrap mode needs one extra dummy
-        // byte of input to finish; feed it ONCE — a second starvation
-        // is a genuinely truncated stream
-        var dummyFed = false
-        while (!inf.finished()) {
-          val n = inf.inflate(buf)
-          if (n == 0 && inf.needsInput()) {
-            if (dummyFed) throw new RuntimeException("trunc")
-            inf.setInput(Array[Byte](0))
-            dummyFed = true
-          }
-          out.write(buf, 0, n)
-        }
-        // deflate byte count = total consumed minus whatever came off
-        // the dummy array (1 - its remaining)
-        val dummyUsed = if (dummyFed) 1 - inf.getRemaining else 0
-        val deflateLen = (inf.getBytesRead - dummyUsed).toInt
-        inf.end()
-        val trailer = start + deflateLen
-        if (trailer + 8 > b.length) None
-        else {
-          val data = out.toByteArray
-          val crc = new CRC32(); crc.update(data)
-          val isize = u32le(b, trailer + 4)
-          if (crc.getValue == u32le(b, trailer) &&
+      // the deflate stream may not run into the 8-byte trailer; its
+      // consumed-byte count is where THIS member's trailer starts
+      Inflate(b, start, b.length - 8 - start, MaxOut, raw = true)
+        .flatMap { case Inflate.Inflated(data, deflateLen) =>
+          val trailer = start + deflateLen
+          val isize = Bytes.u32le(b, trailer + 4)
+          if (Bytes.crc32(data) == Bytes.u32le(b, trailer) &&
             (data.length.toLong & 0xffffffffL) == isize)
             Some((data, GzipMeta(mtime, os, fn, fc, isize), trailer + 8))
           else None
         }
-      } catch { case scala.util.control.NonFatal(_) => None }
     }
 
   /** REAL single-member decode: inflate + verify, and the member must
@@ -263,12 +238,10 @@ object Compression {
       fcomment: Option[String]): Array[Byte] = {
     require(mtime >= 0 && mtime <= 0xffffffffL, "MTIME is u32")
     val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = { le16((v & 0xffff).toInt); le16(((v >> 16) & 0xffff).toInt) }
     out.write(0x1f); out.write(0x8b); out.write(8)
     out.write((if (fname.isDefined) 0x08 else 0) |
       (if (fcomment.isDefined) 0x10 else 0))
-    le32(mtime)
+    Bytes.le32(out, mtime)
     out.write(0); out.write(255) // XFL, OS=unknown
     fname.foreach { s =>
       out.write(s.getBytes("ISO-8859-1")); out.write(0)
@@ -284,9 +257,8 @@ object Compression {
       out.write(buf, 0, n)
     }
     def8.end()
-    val crc = new CRC32(); crc.update(data)
-    le32(crc.getValue)
-    le32(data.length.toLong & 0xffffffffL)
+    Bytes.le32(out, Bytes.crc32(data))
+    Bytes.le32(out, data.length.toLong & 0xffffffffL)
     out.toByteArray
   }
 
@@ -317,8 +289,7 @@ object Compression {
     val plain = b(e - 4) == 'P' && b(e - 3) == 'A' && b(e - 2) == 'R' &&
       b(e - 1) == '1'
     if (!enc && !plain) return None
-    val fl = (b(e - 8) & 0xffL) | ((b(e - 7) & 0xffL) << 8) |
-      ((b(e - 6) & 0xffL) << 16) | ((b(e - 5) & 0xffL) << 24)
+    val fl = Bytes.u32le(b, e - 8)
     // footer + trailer (8) must fit after the 4-byte leading magic
     if (fl <= 0 || fl > e - 12L) return None
     Some(ParquetShell(fl, enc))
@@ -352,9 +323,6 @@ object Compression {
     val P1 = -1640531535; val P2 = -2048144777; val P3 = -1028477379
     val P4 = 668265263; val P5 = 374761393
     def rotl(x: Int, r: Int): Int = (x << r) | (x >>> (32 - r))
-    def u32(i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) |
-        ((b(i + 3) & 0xff) << 24)
     var i = off
     val end = off + len
     var h =
@@ -362,16 +330,16 @@ object Compression {
         var v1 = seed + P1 + P2; var v2 = seed + P2
         var v3 = seed; var v4 = seed - P1
         while (i <= end - 16) {
-          v1 = rotl(v1 + u32(i) * P2, 13) * P1
-          v2 = rotl(v2 + u32(i + 4) * P2, 13) * P1
-          v3 = rotl(v3 + u32(i + 8) * P2, 13) * P1
-          v4 = rotl(v4 + u32(i + 12) * P2, 13) * P1
+          v1 = rotl(v1 + Bytes.i32le(b, i) * P2, 13) * P1
+          v2 = rotl(v2 + Bytes.i32le(b, i + 4) * P2, 13) * P1
+          v3 = rotl(v3 + Bytes.i32le(b, i + 8) * P2, 13) * P1
+          v4 = rotl(v4 + Bytes.i32le(b, i + 12) * P2, 13) * P1
           i += 16
         }
         rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
       } else seed + P5
     h += len
-    while (i <= end - 4) { h = rotl(h + u32(i) * P3, 17) * P4; i += 4 }
+    while (i <= end - 4) { h = rotl(h + Bytes.i32le(b, i) * P3, 17) * P4; i += 4 }
     while (i < end) { h = rotl(h + (b(i) & 0xff) * P5, 11) * P1; i += 1 }
     h ^= h >>> 15; h *= P2; h ^= h >>> 13; h *= P3; h ^= h >>> 16
     h
@@ -389,7 +357,7 @@ object Compression {
     * & 0xff over the descriptor) — a forged or torn header fails. */
   def decodeLz4Header(b: Array[Byte]): Option[Lz4Meta] = {
     if (b == null || b.length < 7) return None
-    if (u32le(b, 0) != 0x184d2204L) return None
+    if (Bytes.u32le(b, 0) != 0x184d2204L) return None
     val flg = b(4) & 0xff
     if ((flg >>> 6) != 1) return None // version must be 01
     if ((flg & 0x02) != 0) return None // reserved bit
@@ -405,7 +373,7 @@ object Compression {
     if (((xxh32(b, 4, descLen) >>> 8) & 0xff) != hc) return None
     val contentSize =
       if (hasContentSize)
-        Some((0 until 8).map(k => (b(6 + k) & 0xffL) << (8 * k)).sum)
+        Some(Bytes.u64le(b, 6))
       else None
     Some(Lz4Meta(contentSize, 64 << ((bmCode - 4) * 2),
       (flg & 0x10) != 0))
@@ -417,25 +385,17 @@ object Compression {
       withContentSize: Boolean = true): Array[Byte] = {
     require(blockMaxCode >= 4 && blockMaxCode <= 7)
     val out = new ByteArrayOutputStream(payload.length + 32)
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    le32(0x184d2204L)
+    Bytes.le32(out, 0x184d2204L)
     val flg = 0x40 | 0x20 | (if (withContentSize) 0x08 else 0)
     out.write(flg)
     out.write(blockMaxCode << 4)
-    if (withContentSize) {
-      var v = payload.length.toLong
-      var k = 0
-      while (k < 8) { out.write((v & 0xff).toInt); v >>= 8; k += 1 }
-    }
+    if (withContentSize) Bytes.le64(out, payload.length.toLong)
     val desc = out.toByteArray
     out.write((xxh32(desc, 4, desc.length - 4) >>> 8) & 0xff)
     // one uncompressed block (high bit of the size word set) + EndMark
-    le32(payload.length.toLong | 0x80000000L)
+    Bytes.le32(out, payload.length.toLong | 0x80000000L)
     out.write(payload, 0, payload.length)
-    le32(0L)
+    Bytes.le32(out, 0L)
     out.toByteArray
   }
 }

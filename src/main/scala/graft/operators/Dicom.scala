@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.codec.Bytes
+
 /** DICOM Part 10 file sniff (public spec: NEMA PS3.10 file format +
   * PS3.5 encoding). Medical imaging is a first-class large-corpus
   * modality, and the Part 10 layout answers triage without decoding
@@ -32,25 +34,20 @@ object Dicom {
   /** Explicit VR little endian (the default for Part 10 datasets). */
   val ExplicitVrLe = "1.2.840.10008.1.2.1"
 
-  private def u16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], i: Int): Long =
-    u16(b, i).toLong | (u16(b, i + 2).toLong << 16)
-
   /** One explicit-VR element at `off`: (group, elem, value offset,
     * value length, next offset). None = malformed/truncated. */
   private def elementAt(b: Array[Byte],
       off: Long): Option[(Int, Int, Long, Long, Long)] = {
     if (off + 8 > b.length) return None
-    val group = u16(b, off.toInt)
-    val elem = u16(b, off.toInt + 2)
+    val group = Bytes.u16le(b, off.toInt)
+    val elem = Bytes.u16le(b, off.toInt + 2)
     val vr = new String(b, off.toInt + 4, 2, "US-ASCII")
     if (!vr.forall(c => c >= 'A' && c <= 'Z')) return None
     val (vOff, vLen) =
       if (LongVrs.contains(vr)) {
         if (off + 12 > b.length) return None
-        (off + 12, u32(b, off.toInt + 8))
-      } else (off + 8, u16(b, off.toInt + 6).toLong)
+        (off + 12, Bytes.u32le(b, off.toInt + 8))
+      } else (off + 8, Bytes.u16le(b, off.toInt + 6).toLong)
     if (vLen < 0 || vOff + vLen > b.length) return None
     Some((group, elem, vOff, vLen, vOff + vLen))
   }
@@ -62,7 +59,7 @@ object Dicom {
   private def isUndefinedLen(b: Array[Byte], off: Long): Boolean =
     off + 12 <= b.length && {
       val vr = new String(b, off.toInt + 4, 2, "US-ASCII")
-      LongVrs.contains(vr) && u32(b, off.toInt + 8) == 0xFFFFFFFFL
+      LongVrs.contains(vr) && Bytes.u32le(b, off.toInt + 8) == 0xFFFFFFFFL
     }
 
   private def str(b: Array[Byte], off: Long, len: Long): String = {
@@ -81,7 +78,7 @@ object Dicom {
       // File Meta group: (0002,0000) group length (UL) delimits it
       val first = elementAt(b, off).getOrElse(return None)
       if (first._1 != 2 || first._2 != 0 || first._4 != 4) return None
-      val metaLen = u32(b, first._3.toInt)
+      val metaLen = Bytes.u32le(b, first._3.toInt)
       val metaEnd = first._5 + metaLen
       if (metaEnd > b.length) return None
       off = first._5
@@ -119,9 +116,9 @@ object Dicom {
               else if (g == 0x0010 && e == 0x0010)
                 patient = Some(str(b, vOff, vLen))
               else if (g == 0x0028 && e == 0x0010 && vLen == 2)
-                rows = Some(u16(b, vOff.toInt))
+                rows = Some(Bytes.u16le(b, vOff.toInt))
               else if (g == 0x0028 && e == 0x0011 && vLen == 2)
-                cols = Some(u16(b, vOff.toInt))
+                cols = Some(Bytes.u16le(b, vOff.toInt))
               off = next
             // a malformed/truncated element rejects the whole file: a
             // silent partial on a torn blob would be plausible-wrong
@@ -141,8 +138,6 @@ object Dicom {
     require(rows >= 1 && rows <= 0xffff && cols >= 1 && cols <= 0xffff)
     require(pixelBytes >= 0 && pixelBytes % 2 == 0, "even value lengths")
     val out = new ByteArrayOutputStream(256 + pixelBytes)
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Long): Unit = { w16((v & 0xffff).toInt); w16(((v >> 16) & 0xffff).toInt) }
     def pad(s: String): Array[Byte] = {
       val raw = s.getBytes("US-ASCII")
       if (raw.length % 2 == 0) raw else raw :+ 0.toByte // UI pads with NUL
@@ -150,10 +145,9 @@ object Dicom {
     def shortEl(group: Int, elem: Int, vr: String,
         value: Array[Byte]): Array[Byte] = {
       val o = new ByteArrayOutputStream(8 + value.length)
-      def x16(v: Int): Unit = { o.write(v & 0xff); o.write((v >> 8) & 0xff) }
-      x16(group); x16(elem)
+      Bytes.le16(o, group); Bytes.le16(o, elem)
       o.write(vr.getBytes("US-ASCII"), 0, 2)
-      x16(value.length)
+      Bytes.le16(o, value.length)
       o.write(value, 0, value.length)
       o.toByteArray
     }
@@ -181,10 +175,10 @@ object Dicom {
         Array[Byte]((cols & 0xff).toByte, ((cols >> 8) & 0xff).toByte))
     out.write(ds1, 0, ds1.length)
     // (7FE0,0010) PixelData OB: long-form 12-byte header
-    w16(0x7fe0); w16(0x0010)
+    Bytes.le16(out, 0x7fe0); Bytes.le16(out, 0x0010)
     out.write("OB".getBytes("US-ASCII"), 0, 2)
-    w16(0) // reserved pad
-    w32(pixelBytes.toLong)
+    Bytes.le16(out, 0) // reserved pad
+    Bytes.le32(out, pixelBytes.toLong)
     out.write(new Array[Byte](pixelBytes), 0, pixelBytes)
     out.toByteArray
   }

@@ -3,6 +3,7 @@ package graft.operators
 import java.io.ByteArrayOutputStream
 import java.security.MessageDigest
 
+import graft.codec.{Bytes, MsbBitReader, MsbBitWriter}
 import graft.engine.Tables
 
 /** FLAC subset codec — REAL lossless audio decode, pure JVM.
@@ -30,58 +31,20 @@ import graft.engine.Tables
   */
 object Flac {
 
-  // ------------------------------------------------------------------
-  // bit I/O (MSB-first, the FLAC convention)
-  // ------------------------------------------------------------------
-
-  private final class BitWriter {
-    private val out = new ByteArrayOutputStream(256)
-    private var cur = 0
-    private var nbits = 0
-    def writeBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >>> i) & 1L).toInt
-        nbits += 1
-        if (nbits == 8) { out.write(cur); cur = 0; nbits = 0 }
-        i -= 1
-      }
-    }
-    def writeUnary(q: Int): Unit = { // q zero bits then a one bit
-      var i = 0
-      while (i < q) { writeBits(0, 1); i += 1 }
-      writeBits(1, 1)
-    }
-    def alignByte(): Unit = if (nbits > 0) writeBits(0, 8 - nbits)
-    def toBytes: Array[Byte] = { alignByte(); out.toByteArray }
+  /** Rice quotient: `q` zero bits then a one bit (MSB-first bit I/O is
+    * [[MsbBitReader]]/[[MsbBitWriter]], the FLAC convention). */
+  private def writeUnary(w: MsbBitWriter, q: Int): Unit = {
+    var i = 0
+    while (i < q) { w.write(0, 1); i += 1 }
+    w.write(1, 1)
   }
-
-  private final class BitReader(bytes: Array[Byte], startByte: Int) {
-    private var pos = startByte
-    private var bit = 0
-    def bytePos: Int = pos
-    def aligned: Boolean = bit == 0
-    def readBits(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        if (pos >= bytes.length) throw new IllegalStateException("eof")
-        v = (v << 1) | ((bytes(pos) >> (7 - bit)) & 1)
-        bit += 1
-        if (bit == 8) { bit = 0; pos += 1 }
-        i += 1
-      }
-      v
+  private def readUnary(r: MsbBitReader): Int = {
+    var q = 0
+    while (r.bit() == 0) {
+      q += 1
+      if (q > (1 << 20)) throw new IllegalStateException("runaway unary")
     }
-    def readUnary(): Int = {
-      var q = 0
-      while (readBits(1) == 0) {
-        q += 1
-        if (q > (1 << 20)) throw new IllegalStateException("runaway unary")
-      }
-      q
-    }
-    def alignByte(): Unit = if (bit != 0) { bit = 0; pos += 1 }
+    q
   }
 
   // ------------------------------------------------------------------
@@ -122,24 +85,24 @@ object Flac {
     crc
   }
 
-  private def writeUtf8Number(w: BitWriter, n: Long): Unit = {
-    if (n < 0x80) w.writeBits(n, 8)
+  private def writeUtf8Number(w: MsbBitWriter, n: Long): Unit = {
+    if (n < 0x80) w.write(n, 8)
     else if (n < 0x800) {
-      w.writeBits(0xc0L | (n >> 6), 8); w.writeBits(0x80L | (n & 0x3f), 8)
+      w.write(0xc0L | (n >> 6), 8); w.write(0x80L | (n & 0x3f), 8)
     } else if (n < 0x10000) {
-      w.writeBits(0xe0L | (n >> 12), 8)
-      w.writeBits(0x80L | ((n >> 6) & 0x3f), 8)
-      w.writeBits(0x80L | (n & 0x3f), 8)
+      w.write(0xe0L | (n >> 12), 8)
+      w.write(0x80L | ((n >> 6) & 0x3f), 8)
+      w.write(0x80L | (n & 0x3f), 8)
     } else throw new IllegalArgumentException(s"frame number $n too large")
   }
 
-  private def readUtf8Number(r: BitReader): Long = {
-    val b0 = r.readBits(8)
+  private def readUtf8Number(r: MsbBitReader): Long = {
+    val b0 = r.bits(8)
     if ((b0 & 0x80) == 0) b0
     else if ((b0 & 0xe0) == 0xc0)
-      ((b0 & 0x1f) << 6) | (r.readBits(8) & 0x3f)
+      ((b0 & 0x1f) << 6) | (r.bits(8) & 0x3f)
     else if ((b0 & 0xf0) == 0xe0) {
-      val b1 = r.readBits(8) & 0x3f; val b2 = r.readBits(8) & 0x3f
+      val b1 = r.bits(8) & 0x3f; val b2 = r.bits(8) & 0x3f
       ((b0 & 0x0f) << 12) | (b1 << 6) | b2
     } else throw new IllegalStateException("bad utf8 frame number")
   }
@@ -181,25 +144,25 @@ object Flac {
     * zigzag magnitude (4-bit method, partition order 0), escaping to
     * raw two's-complement fixed width when the unary quotients would
     * outgrow parameter 14 (spike-over-silence frames). */
-  private def writeResiduals(sub: BitWriter, res: Array[Long]): Unit = {
+  private def writeResiduals(sub: MsbBitWriter, res: Array[Long]): Unit = {
     val zz = res.map(zigzag)
     val mean = if (zz.isEmpty) 0L else zz.sum / math.max(1, zz.length)
     var p = 0
     while (p < 14 && (mean >> p) > 0) p += 1
     val maxZz = if (zz.isEmpty) 0L else zz.max
-    sub.writeBits(0, 2) // residual method: 4-bit rice
-    sub.writeBits(0, 4) // partition order 0: one partition
+    sub.write(0, 2) // residual method: 4-bit rice
+    sub.write(0, 4) // partition order 0: one partition
     if ((maxZz >> p) > (1 << 10)) {
       val width = res.map { v =>
         65 - java.lang.Long.numberOfLeadingZeros(if (v >= 0) v else ~v)
       }.max.min(31)
-      sub.writeBits(0xf, 4); sub.writeBits(width, 5)
-      res.foreach(v => sub.writeBits(v & ((1L << width) - 1), width))
+      sub.write(0xf, 4); sub.write(width, 5)
+      res.foreach(v => sub.write(v & ((1L << width) - 1), width))
     } else {
-      sub.writeBits(p, 4)
+      sub.write(p, 4)
       zz.foreach { u =>
-        sub.writeUnary((u >> p).toInt)
-        if (p > 0) sub.writeBits(u & ((1L << p) - 1), p)
+        writeUnary(sub, (u >> p).toInt)
+        if (p > 0) sub.write(u & ((1L << p) - 1), p)
       }
     }
   }
@@ -218,26 +181,26 @@ object Flac {
 
   /** Write one LPC subframe: warmup at `bps`, coefficient precision /
     * shift / quantized coefficients, then Rice residuals. */
-  private def writeSubframeLpc(sub: BitWriter, block: Array[Int], bps: Int,
+  private def writeSubframeLpc(sub: MsbBitWriter, block: Array[Int], bps: Int,
       coefs: Array[Int], shift: Int, prec: Int): Unit = {
     val ord = coefs.length
-    sub.writeBits(0, 1); sub.writeBits(32 | (ord - 1), 6); sub.writeBits(0, 1)
+    sub.write(0, 1); sub.write(32 | (ord - 1), 6); sub.write(0, 1)
     var i = 0
-    while (i < ord) { sub.writeBits(mask(block(i), bps), bps); i += 1 }
-    sub.writeBits(prec - 1, 4)
-    sub.writeBits(shift, 5)
-    coefs.foreach(c => sub.writeBits(mask(c, prec), prec))
+    while (i < ord) { sub.write(mask(block(i), bps), bps); i += 1 }
+    sub.write(prec - 1, 4)
+    sub.write(shift, 5)
+    coefs.foreach(c => sub.write(mask(c, prec), prec))
     val res = Array.tabulate(block.length - ord)(j =>
       block(ord + j).toLong - lpcPredict(block, ord + j, coefs, shift))
     writeResiduals(sub, res)
   }
 
   /** Write one FIXED subframe (order capped by warmup availability). */
-  private def writeSubframeFixed(sub: BitWriter, block: Array[Int], bps: Int,
+  private def writeSubframeFixed(sub: MsbBitWriter, block: Array[Int], bps: Int,
       k: Int): Unit = {
-    sub.writeBits(0, 1); sub.writeBits(8 | k, 6); sub.writeBits(0, 1)
+    sub.write(0, 1); sub.write(8 | k, 6); sub.write(0, 1)
     var i = 0
-    while (i < k) { sub.writeBits(mask(block(i), bps), bps); i += 1 }
+    while (i < k) { sub.write(mask(block(i), bps), bps); i += 1 }
     writeResiduals(sub,
       Array.tabulate(block.length - k)(j => fixedResidual(block, k + j, k)))
   }
@@ -256,17 +219,17 @@ object Flac {
     val out = new ByteArrayOutputStream(samples.length + 256)
     out.write("fLaC".getBytes("US-ASCII"), 0, 4)
     // STREAMINFO, last-metadata-block flag set
-    val si = new BitWriter
-    si.writeBits(blockSize, 16); si.writeBits(blockSize, 16)
-    si.writeBits(0, 24); si.writeBits(0, 24) // frame sizes unknown
-    si.writeBits(sampleRate, 20)
-    si.writeBits(0, 3) // channels - 1 = 0 (mono)
-    si.writeBits(15, 5) // bits per sample - 1 = 15
-    si.writeBits(samples.length.toLong, 36)
+    val si = new MsbBitWriter
+    si.write(blockSize, 16); si.write(blockSize, 16)
+    si.write(0, 24); si.write(0, 24) // frame sizes unknown
+    si.write(sampleRate, 20)
+    si.write(0, 3) // channels - 1 = 0 (mono)
+    si.write(15, 5) // bits per sample - 1 = 15
+    si.write(samples.length.toLong, 36)
     val md = MessageDigest.getInstance("MD5")
     samples.foreach { s => md.update(s.toByte); md.update((s >> 8).toByte) }
-    md.digest().foreach(b => si.writeBits(b & 0xffL, 8))
-    val siBytes = si.toBytes
+    md.digest().foreach(b => si.write(b & 0xffL, 8))
+    val siBytes = si.toByteArray
     out.write(0x80) // last block + type 0
     out.write(0); out.write(0); out.write(siBytes.length) // 24-bit length
     out.write(siBytes, 0, siBytes.length)
@@ -275,34 +238,34 @@ object Flac {
     var off = 0
     while (off < samples.length) {
       val n = math.min(blockSize, samples.length - off)
-      val frame = new BitWriter
+      val frame = new MsbBitWriter
       // header: sync(14) 111111111111 10, reserved 0, blocking 0 (fixed)
-      frame.writeBits(0xfff8L >> 0, 16) // 0xFF 0xF8
-      frame.writeBits(0x7, 4) // blocksize: 16-bit at end of header
-      frame.writeBits(0x0, 4) // sample rate: from STREAMINFO
-      frame.writeBits(0x0, 4) // channels: mono
-      frame.writeBits(0x4, 3) // sample size: 16-bit
-      frame.writeBits(0, 1) // reserved
+      frame.write(0xfff8L >> 0, 16) // 0xFF 0xF8
+      frame.write(0x7, 4) // blocksize: 16-bit at end of header
+      frame.write(0x0, 4) // sample rate: from STREAMINFO
+      frame.write(0x0, 4) // channels: mono
+      frame.write(0x4, 3) // sample size: 16-bit
+      frame.write(0, 1) // reserved
       writeUtf8Number(frame, frameIdx)
-      frame.writeBits(n - 1, 16)
-      val headerBytes = frame.toBytes // byte-aligned by construction
+      frame.write(n - 1, 16)
+      val headerBytes = frame.toByteArray // byte-aligned by construction
       val withCrc8 = headerBytes :+ crc8(headerBytes, 0, headerBytes.length).toByte
 
       // subframe
-      val sub = new BitWriter
+      val sub = new MsbBitWriter
       val block = java.util.Arrays.copyOfRange(samples, off, off + n)
       val allEqual = block.forall(_ == block(0))
       if (allEqual) {
-        sub.writeBits(0, 1); sub.writeBits(0, 6); sub.writeBits(0, 1)
-        sub.writeBits(block(0) & 0xffffL, 16)
+        sub.write(0, 1); sub.write(0, 6); sub.write(0, 1)
+        sub.write(block(0) & 0xffffL, 16)
       } else if (frameIdx % 7 == 3) { // VERBATIM
-        sub.writeBits(0, 1); sub.writeBits(1, 6); sub.writeBits(0, 1)
-        block.foreach(s => sub.writeBits(s & 0xffffL, 16))
+        sub.write(0, 1); sub.write(1, 6); sub.write(0, 1)
+        block.foreach(s => sub.write(s & 0xffffL, 16))
       } else { // FIXED order
         val k = math.min((frameIdx % 5).toInt, n - 1)
         writeSubframeFixed(sub, block, 16, k)
       }
-      val subBytes = sub.toBytes // zero-padded to byte alignment per spec
+      val subBytes = sub.toByteArray // zero-padded to byte alignment per spec
       val frameBytes = withCrc8 ++ subBytes
       val c16 = crc16(frameBytes, 0, frameBytes.length)
       out.write(frameBytes, 0, frameBytes.length)
@@ -330,13 +293,13 @@ object Flac {
     val total = left.length
     val out = new ByteArrayOutputStream(total * 2 + 256)
     out.write("fLaC".getBytes("US-ASCII"), 0, 4)
-    val si = new BitWriter
-    si.writeBits(blockSize, 16); si.writeBits(blockSize, 16)
-    si.writeBits(0, 24); si.writeBits(0, 24)
-    si.writeBits(sampleRate, 20)
-    si.writeBits(1, 3) // channels - 1 = 1 (stereo)
-    si.writeBits(15, 5)
-    si.writeBits(total.toLong, 36)
+    val si = new MsbBitWriter
+    si.write(blockSize, 16); si.write(blockSize, 16)
+    si.write(0, 24); si.write(0, 24)
+    si.write(sampleRate, 20)
+    si.write(1, 3) // channels - 1 = 1 (stereo)
+    si.write(15, 5)
+    si.write(total.toLong, 36)
     val md = MessageDigest.getInstance("MD5")
     var t = 0
     while (t < total) { // interleaved L R, little-endian 16-bit
@@ -344,8 +307,8 @@ object Flac {
       md.update(right(t).toByte); md.update((right(t) >> 8).toByte)
       t += 1
     }
-    md.digest().foreach(b => si.writeBits(b & 0xffL, 8))
-    val siBytes = si.toBytes
+    md.digest().foreach(b => si.write(b & 0xffL, 8))
+    val siBytes = si.toByteArray
     out.write(0x80)
     out.write(0); out.write(0); out.write(siBytes.length)
     out.write(siBytes, 0, siBytes.length)
@@ -361,16 +324,16 @@ object Flac {
         case 2 => 0x9 // right/side
         case _ => 0xa // mid/side
       }
-      val frame = new BitWriter
-      frame.writeBits(0xfff8L, 16)
-      frame.writeBits(0x7, 4) // blocksize: 16-bit at end of header
-      frame.writeBits(0x0, 4)
-      frame.writeBits(chanBits, 4)
-      frame.writeBits(0x4, 3) // 16-bit
-      frame.writeBits(0, 1)
+      val frame = new MsbBitWriter
+      frame.write(0xfff8L, 16)
+      frame.write(0x7, 4) // blocksize: 16-bit at end of header
+      frame.write(0x0, 4)
+      frame.write(chanBits, 4)
+      frame.write(0x4, 3) // 16-bit
+      frame.write(0, 1)
       writeUtf8Number(frame, frameIdx)
-      frame.writeBits(n - 1, 16)
-      val headerBytes = frame.toBytes
+      frame.write(n - 1, 16)
+      val headerBytes = frame.toByteArray
       val withCrc8 = headerBytes :+
         crc8(headerBytes, 0, headerBytes.length).toByte
 
@@ -384,7 +347,7 @@ object Flac {
         case 2 => (side, 17, r, 16)
         case _ => (mid, 16, side, 17)
       }
-      val sub = new BitWriter
+      val sub = new MsbBitWriter
       Seq((ch0, bps0), (ch1, bps1)).zipWithIndex.foreach {
         case ((ch, bps), slot) =>
           // LPC on slot 0 of even frames (order 2, varying coefs);
@@ -399,7 +362,7 @@ object Flac {
             writeSubframeFixed(sub, ch, bps, k)
           }
       }
-      val subBytes = sub.toBytes
+      val subBytes = sub.toByteArray
       val frameBytes = withCrc8 ++ subBytes
       val c16 = crc16(frameBytes, 0, frameBytes.length)
       out.write(frameBytes, 0, frameBytes.length)
@@ -428,12 +391,12 @@ object Flac {
 
   /** Read one residual block (both Rice methods + the raw-width
     * escape), returning the n-ord residual values (RFC 9639 §9.2.7). */
-  private def readResiduals(r: BitReader, n: Int, ord: Int): Array[Long] = {
-    val method = r.readBits(2).toInt
+  private def readResiduals(r: MsbBitReader, n: Int, ord: Int): Array[Long] = {
+    val method = r.bits(2).toInt
     if (method > 1) throw new IllegalStateException("bad residual method")
     val pBits = if (method == 0) 4 else 5
     val escape = (1 << pBits) - 1
-    val partOrder = r.readBits(4).toInt
+    val partOrder = r.bits(4).toInt
     val nParts = 1 << partOrder
     if (partOrder > 0 && (n % nParts != 0 || n / nParts <= ord))
       throw new IllegalStateException("bad partition order")
@@ -443,19 +406,19 @@ object Flac {
     while (part < nParts) {
       val count = (if (partOrder == 0) n else n / nParts) -
         (if (part == 0) ord else 0)
-      val p = r.readBits(pBits).toInt
+      val p = r.bits(pBits).toInt
       if (p == escape) {
-        val width = r.readBits(5).toInt // 0 = all-zero residuals
+        val width = r.bits(5).toInt // 0 = all-zero residuals
         var j = 0
         while (j < count) {
-          res(idx) = if (width == 0) 0L else sext(r.readBits(width), width)
+          res(idx) = if (width == 0) 0L else sext(r.bits(width), width)
           idx += 1; j += 1
         }
       } else {
         var j = 0
         while (j < count) {
-          val q = r.readUnary().toLong
-          res(idx) = unzigzag((q << p) | (if (p > 0) r.readBits(p) else 0L))
+          val q = readUnary(r).toLong
+          res(idx) = unzigzag((q << p) | (if (p > 0) r.bits(p) else 0L))
           idx += 1; j += 1
         }
       }
@@ -467,22 +430,22 @@ object Flac {
   /** Read one subframe at `bps` bits: CONSTANT / VERBATIM / FIXED
     * orders 0–4 / LPC orders 1–32 with quantized-coefficient
     * reconstruction (64-bit accumulator, arithmetic shift). */
-  private def readSubframe(r: BitReader, n: Int, bps: Int): Array[Int] = {
-    if (r.readBits(1) != 0) throw new IllegalStateException("pad bit")
-    val typ = r.readBits(6).toInt
-    if (r.readBits(1) != 0) // wasted bits unsupported
+  private def readSubframe(r: MsbBitReader, n: Int, bps: Int): Array[Int] = {
+    if (r.bits(1) != 0) throw new IllegalStateException("pad bit")
+    val typ = r.bits(6).toInt
+    if (r.bits(1) != 0) // wasted bits unsupported
       throw new IllegalStateException("wasted bits")
     val block = new Array[Int](n)
     if (typ == 0) { // CONSTANT
-      java.util.Arrays.fill(block, sext(r.readBits(bps), bps))
+      java.util.Arrays.fill(block, sext(r.bits(bps), bps))
     } else if (typ == 1) { // VERBATIM
       var i = 0
-      while (i < n) { block(i) = sext(r.readBits(bps), bps); i += 1 }
+      while (i < n) { block(i) = sext(r.bits(bps), bps); i += 1 }
     } else if (typ >= 8 && typ <= 12) { // FIXED order 0-4
       val k = typ - 8
       if (k > n) throw new IllegalStateException("order > block")
       var i = 0
-      while (i < k) { block(i) = sext(r.readBits(bps), bps); i += 1 }
+      while (i < k) { block(i) = sext(r.bits(bps), bps); i += 1 }
       val res = readResiduals(r, n, k)
       i = k
       while (i < n) { block(i) = fixedRestore(block, i, k, res(i - k)); i += 1 }
@@ -490,14 +453,14 @@ object Flac {
       val ord = typ - 31
       if (ord > n) throw new IllegalStateException("order > block")
       var i = 0
-      while (i < ord) { block(i) = sext(r.readBits(bps), bps); i += 1 }
-      val precM1 = r.readBits(4).toInt
+      while (i < ord) { block(i) = sext(r.bits(bps), bps); i += 1 }
+      val precM1 = r.bits(4).toInt
       if (precM1 == 15) throw new IllegalStateException("invalid precision")
       val prec = precM1 + 1
-      val shift = r.readBits(5).toInt
+      val shift = r.bits(5).toInt
       if ((shift & 0x10) != 0) // 5-bit two's complement; negative invalid
         throw new IllegalStateException("negative lpc shift")
-      val coefs = Array.fill(ord)(sext(r.readBits(prec), prec))
+      val coefs = Array.fill(ord)(sext(r.bits(prec), prec))
       val res = readResiduals(r, n, ord)
       i = ord
       while (i < n) {
@@ -529,19 +492,18 @@ object Flac {
         val hdr = bytes(off) & 0xff
         last = (hdr & 0x80) != 0
         val typ = hdr & 0x7f
-        val len = ((bytes(off + 1) & 0xff) << 16) |
-          ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
+        val len = Bytes.u24be(bytes, off + 1)
         if (off + 4 + len > bytes.length) return None
         if (typ == 0) {
           if (len != 34) return None
-          val r = new BitReader(bytes, off + 4)
-          r.readBits(16); r.readBits(16); r.readBits(24); r.readBits(24)
-          rate = r.readBits(20).toInt
-          channels = r.readBits(3).toInt + 1
-          val bps = r.readBits(5).toInt + 1
+          val r = new MsbBitReader(bytes, off + 4)
+          r.bits(16); r.bits(16); r.bits(24); r.bits(24)
+          rate = r.bits(20).toInt
+          channels = r.bits(3).toInt + 1
+          val bps = r.bits(5).toInt + 1
           if (channels > 2 || bps != 16) return None // subset contract
-          totalSamples = r.readBits(36)
-          md5 = Array.tabulate(16)(_ => r.readBits(8).toByte)
+          totalSamples = r.bits(36)
+          md5 = Array.tabulate(16)(_ => r.bits(8).toByte)
           sawStreamInfo = true
         }
         off += 4 + len
@@ -553,30 +515,30 @@ object Flac {
       var frames = 0
       while (got < totalSamples) {
         val frameStart = off
-        val r = new BitReader(bytes, off)
-        if (r.readBits(14) != 0x3ffe) return None // sync
-        r.readBits(1) // reserved
-        if (r.readBits(1) != 0) return None // fixed blocksize only
-        val bsBits = r.readBits(4).toInt
-        val srBits = r.readBits(4).toInt
-        val chan = r.readBits(4).toInt
-        val ssBits = r.readBits(3).toInt
-        r.readBits(1)
+        val r = new MsbBitReader(bytes, off)
+        if (r.bits(14) != 0x3ffe) return None // sync
+        r.bits(1) // reserved
+        if (r.bits(1) != 0) return None // fixed blocksize only
+        val bsBits = r.bits(4).toInt
+        val srBits = r.bits(4).toInt
+        val chan = r.bits(4).toInt
+        val ssBits = r.bits(3).toInt
+        r.bits(1)
         if (ssBits != 4) return None // 16-bit only
         val frameChannels =
           if (chan <= 7) chan + 1 else if (chan <= 10) 2 else return None
         if (frameChannels != channels) return None
         readUtf8Number(r)
         val n = bsBits match {
-          case 0x6 => r.readBits(8).toInt + 1
-          case 0x7 => r.readBits(16).toInt + 1
+          case 0x6 => r.bits(8).toInt + 1
+          case 0x7 => r.bits(16).toInt + 1
           case 0x1 => 192
           case b if b >= 2 && b <= 5 => 576 << (b - 2)
           case b if b >= 8 => 256 << (b - 8)
           case _ => return None
         }
-        if (srBits == 0xc) r.readBits(8)
-        else if (srBits == 0xd || srBits == 0xe) r.readBits(16)
+        if (srBits == 0xc) r.bits(8)
+        else if (srBits == 0xd || srBits == 0xe) r.bits(16)
         else if (srBits == 0xf) return None
         if (!r.aligned) return None // header is byte-aligned here
         val headerEnd = r.bytePos
@@ -584,7 +546,7 @@ object Flac {
           (bytes(headerEnd) & 0xff)) return None
         if (got + n > totalSamples) return None
 
-        val br = new BitReader(bytes, headerEnd + 1)
+        val br = new MsbBitReader(bytes, headerEnd + 1)
         if (channels == 1) {
           val block = readSubframe(br, n, 16)
           System.arraycopy(block, 0, samples, got.toInt, n)
@@ -612,11 +574,10 @@ object Flac {
             i += 1
           }
         }
-        br.alignByte()
+        br.align()
         val bodyEnd = br.bytePos
         if (bodyEnd + 2 > bytes.length) return None
-        val declared = ((bytes(bodyEnd) & 0xff) << 8) |
-          (bytes(bodyEnd + 1) & 0xff)
+        val declared = Bytes.u16be(bytes, bodyEnd)
         if (crc16(bytes, frameStart, bodyEnd) != declared) return None
         got += n
         frames += 1

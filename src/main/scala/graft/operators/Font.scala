@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.codec.{Bytes, Inflate}
+
 /** Font-file sniff (public specs: the OpenType/TrueType `sfnt`
   * container — Microsoft OT spec §"The OpenType Font File" / Apple
   * TrueType Reference — and W3C WOFF 1.0 for the zlib-wrapped web
@@ -28,27 +30,23 @@ object Font {
       subfamily: Option[String], nTables: Int, nGlyphs: Option[Int],
       unitsPerEm: Option[Int])
 
-  private def u16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  private def u32(b: Array[Byte], i: Int): Long =
-    (u16(b, i).toLong << 16) | u16(b, i + 2)
-
   private val HeadMagic = 0x5F0F3CF5L
+  private val MaxTable = 64 << 20 // inflated WOFF1 table cap
 
   /** `head` table: unitsPerEm at offset 18, magic at 12 (required). */
   private def parseHead(t: Array[Byte]): Option[Int] = {
     if (t.length < 54) return None
-    if (u32(t, 12) != HeadMagic) return None
-    Some(u16(t, 18))
+    if (Bytes.u32be(t, 12) != HeadMagic) return None
+    Some(Bytes.u16be(t, 18))
   }
 
   /** `maxp` table: numGlyphs at offset 4 (both the 0.5 CFF and 1.0
     * TrueType versions carry it there). */
   private def parseMaxp(t: Array[Byte]): Option[Int] = {
     if (t.length < 6) return None
-    val v = u32(t, 0)
+    val v = Bytes.u32be(t, 0)
     if (v != 0x00010000L && v != 0x00005000L) return None
-    Some(u16(t, 4))
+    Some(Bytes.u16be(t, 4))
   }
 
   /** `name` table (format 0): the (family, subfamily) strings —
@@ -56,9 +54,9 @@ object Font {
   private def parseName(t: Array[Byte])
       : Option[(Option[String], Option[String])] = {
     if (t.length < 6) return None
-    if (u16(t, 0) > 1) return None // formats 0 and 1 share the layout
-    val count = u16(t, 2)
-    val stringOff = u16(t, 4)
+    if (Bytes.u16be(t, 0) > 1) return None // formats 0 and 1 share the layout
+    val count = Bytes.u16be(t, 2)
+    val stringOff = Bytes.u16be(t, 4)
     if (count > 4096) return None
     if (6 + 12L * count > t.length) return None
     // (value, preferred?) per nameID; Windows-Unicode wins, first-wins
@@ -68,11 +66,11 @@ object Font {
     var i = 0
     while (i < count) {
       val r = 6 + 12 * i
-      val platform = u16(t, r)
-      val encoding = u16(t, r + 2)
-      val nameId = u16(t, r + 6)
-      val len = u16(t, r + 8)
-      val off = u16(t, r + 10)
+      val platform = Bytes.u16be(t, r)
+      val encoding = Bytes.u16be(t, r + 2)
+      val nameId = Bytes.u16be(t, r + 6)
+      val len = Bytes.u16be(t, r + 8)
+      val off = Bytes.u16be(t, r + 10)
       if (nameId == 1 || nameId == 2) {
         val from = stringOff.toLong + off
         if (from + len > t.length) return None
@@ -99,24 +97,6 @@ object Font {
     }
     Some((family.map(_._1), subfamily.map(_._1)))
   }
-
-  private def inflateExact(b: Array[Byte], from: Int, len: Int,
-      expect: Long): Option[Array[Byte]] =
-    try {
-      if (expect < 0 || expect > (64 << 20)) return None
-      val inf = new java.util.zip.Inflater()
-      inf.setInput(b, from, len)
-      val out = new Array[Byte](expect.toInt)
-      var at = 0
-      while (at < out.length && !inf.finished()) {
-        val n = inf.inflate(out, at, out.length - at)
-        if (n == 0 && inf.needsInput()) { inf.end(); return None }
-        at += n
-      }
-      val ok = at == out.length && inf.finished()
-      inf.end()
-      if (ok) Some(out) else None
-    } catch { case _: Exception => None }
 
   /** WOFF2 structural sniff (W3C WOFF2 spec): flavor, the directory
     * walk with its known-tags index and UIntBase128 lengths, and the
@@ -170,17 +150,17 @@ object Font {
   private def woff2Directory(b: Array[Byte])
       : Option[(String, Int, Long, Vector[Woff2Entry], Int)] = {
     if (b == null || b.length < 48) return None
-    if (u32(b, 0) != 0x774F4632L) return None // 'wOF2'
-    val flavor = u32(b, 4) match {
+    if (Bytes.u32be(b, 0) != 0x774F4632L) return None // 'wOF2'
+    val flavor = Bytes.u32be(b, 4) match {
       case 0x00010000L | 0x74727565L => "ttf"
       case 0x4F54544FL => "otf"
       case _ => return None
     }
-    if (u32(b, 8) != b.length) return None // declared total length
-    val nTables = u16(b, 12)
-    if (u16(b, 14) != 0) return None // reserved must be zero
+    if (Bytes.u32be(b, 8) != b.length) return None // declared total length
+    val nTables = Bytes.u16be(b, 12)
+    if (Bytes.u16be(b, 14) != 0) return None // reserved must be zero
     if (nTables < 1 || nTables > 512) return None
-    val totalSfntSize = u32(b, 16)
+    val totalSfntSize = Bytes.u32be(b, 16)
     var at = 48
     val entries = Vector.newBuilder[Woff2Entry]
     var i = 0
@@ -234,7 +214,7 @@ object Font {
     try {
       val (flavor, nTables, _, entries, dataFrom) =
         woff2Directory(b).getOrElse(return None)
-      val compLen = u32(b, 20) // totalCompressedSize
+      val compLen = Bytes.u32be(b, 20) // totalCompressedSize
       if (compLen < 0 || dataFrom + compLen > b.length) return None
       val expected = entries.map(_.dataLen).sum
       if (expected < 0 || expected > (64 << 20)) return None
@@ -300,15 +280,15 @@ object Font {
     val dirBytes = dir.toByteArray
     val total = 48 + dirBytes.length + blockSize
     val o = new ByteArrayOutputStream(total)
-    w32(o, 0x774F4632L) // 'wOF2'
-    w32(o, if (flavor == "otf") 0x4F54544FL else 0x00010000L)
-    w32(o, total.toLong)
-    w16(o, tables.length); w16(o, 0)
-    w32(o, sfnt)
-    w32(o, blockSize.toLong) // totalCompressedSize
-    w16(o, 1); w16(o, 0)
-    w32(o, 0L); w32(o, 0L); w32(o, 0L) // meta
-    w32(o, 0L); w32(o, 0L) // priv
+    Bytes.be32(o, 0x774F4632L) // 'wOF2'
+    Bytes.be32(o, if (flavor == "otf") 0x4F54544FL else 0x00010000L)
+    Bytes.be32(o, total.toLong)
+    Bytes.be16(o, tables.length); Bytes.be16(o, 0)
+    Bytes.be32(o, sfnt)
+    Bytes.be32(o, blockSize.toLong) // totalCompressedSize
+    Bytes.be16(o, 1); Bytes.be16(o, 0)
+    Bytes.be32(o, 0L); Bytes.be32(o, 0L); Bytes.be32(o, 0L) // meta
+    Bytes.be32(o, 0L); Bytes.be32(o, 0L) // priv
     o.write(dirBytes, 0, dirBytes.length)
     (0 until blockSize).foreach(k => o.write((k * 31 + 7) & 0xff))
     o.toByteArray
@@ -350,15 +330,15 @@ object Font {
     val dirBytes = dir.toByteArray
     val total = 48 + dirBytes.length + comp.length
     val o = new ByteArrayOutputStream(total)
-    w32(o, 0x774F4632L) // 'wOF2'
-    w32(o, if (flavor == "otf") 0x4F54544FL else 0x00010000L)
-    w32(o, total.toLong)
-    w16(o, tables.length); w16(o, 0)
-    w32(o, sfnt)
-    w32(o, comp.length.toLong) // totalCompressedSize
-    w16(o, 1); w16(o, 0)
-    w32(o, 0L); w32(o, 0L); w32(o, 0L) // meta
-    w32(o, 0L); w32(o, 0L) // priv
+    Bytes.be32(o, 0x774F4632L) // 'wOF2'
+    Bytes.be32(o, if (flavor == "otf") 0x4F54544FL else 0x00010000L)
+    Bytes.be32(o, total.toLong)
+    Bytes.be16(o, tables.length); Bytes.be16(o, 0)
+    Bytes.be32(o, sfnt)
+    Bytes.be32(o, comp.length.toLong) // totalCompressedSize
+    Bytes.be16(o, 1); Bytes.be16(o, 0)
+    Bytes.be32(o, 0L); Bytes.be32(o, 0L); Bytes.be32(o, 0L) // meta
+    Bytes.be32(o, 0L); Bytes.be32(o, 0L) // priv
     o.write(dirBytes, 0, dirBytes.length)
     o.write(comp, 0, comp.length)
     o.toByteArray
@@ -367,7 +347,7 @@ object Font {
   def decodeFont(b: Array[Byte]): Option[FontMeta] =
     try {
       if (b == null || b.length < 12) return None
-      val tag = u32(b, 0)
+      val tag = Bytes.u32be(b, 0)
       if (tag == 0x774F4646L) return decodeWoff(b) // 'wOFF'
       if (tag == 0x774F4632L) return decodeWoff2Font(b) // 'wOF2'
       val container = tag match {
@@ -375,7 +355,7 @@ object Font {
         case 0x4F54544FL => "otf" // 'OTTO'
         case _ => return None
       }
-      val nTables = u16(b, 4)
+      val nTables = Bytes.u16be(b, 4)
       if (nTables < 1 || nTables > 512) return None
       if (12 + 16L * nTables > b.length) return None
       // directory: tag, checksum, offset, length per table
@@ -386,8 +366,8 @@ object Font {
       while (i < nTables) {
         val r = 12 + 16 * i
         val t = new String(b, r, 4, "ISO-8859-1")
-        val off = u32(b, r + 8)
-        val len = u32(b, r + 12)
+        val off = Bytes.u32be(b, r + 8)
+        val len = Bytes.u32be(b, r + 12)
         if (off < 0 || len < 0 || off + len > b.length) return None
         if (t == "head" || t == "maxp" || t == "name") {
           val slice = java.util.Arrays.copyOfRange(b, off.toInt,
@@ -408,12 +388,12 @@ object Font {
     * equal. */
   private def decodeWoff(b: Array[Byte]): Option[FontMeta] = {
     if (b.length < 44) return None
-    val flavor = u32(b, 4)
+    val flavor = Bytes.u32be(b, 4)
     if (flavor != 0x00010000L && flavor != 0x4F54544FL &&
       flavor != 0x74727565L) return None
-    if (u32(b, 8) != b.length) return None // declared total length
-    val nTables = u16(b, 12)
-    if (u16(b, 14) != 0) return None // reserved must be zero
+    if (Bytes.u32be(b, 8) != b.length) return None // declared total length
+    val nTables = Bytes.u16be(b, 12)
+    if (Bytes.u16be(b, 14) != 0) return None // reserved must be zero
     if (nTables < 1 || nTables > 512) return None
     if (44 + 20L * nTables > b.length) return None
     var head: Option[Array[Byte]] = None
@@ -423,9 +403,9 @@ object Font {
     while (i < nTables) {
       val r = 44 + 20 * i
       val t = new String(b, r, 4, "ISO-8859-1")
-      val off = u32(b, r + 4)
-      val compLen = u32(b, r + 8)
-      val origLen = u32(b, r + 12)
+      val off = Bytes.u32be(b, r + 4)
+      val compLen = Bytes.u32be(b, r + 8)
+      val origLen = Bytes.u32be(b, r + 12)
       if (off < 0 || compLen < 0 || off + compLen > b.length) return None
       if (compLen > origLen) return None
       if (t == "head" || t == "maxp" || t == "name") {
@@ -433,8 +413,8 @@ object Font {
           if (compLen == origLen)
             java.util.Arrays.copyOfRange(b, off.toInt,
               (off + compLen).toInt)
-          else inflateExact(b, off.toInt, compLen.toInt, origLen)
-            .getOrElse(return None)
+          else Inflate(b, off.toInt, compLen.toInt, MaxTable, exact = origLen)
+            .getOrElse(return None).bytes
         t match {
           case "head" => head = Some(table)
           case "maxp" => maxp = Some(table)
@@ -471,34 +451,27 @@ object Font {
   // fixture emitters
   // ------------------------------------------------------------------
 
-  private def w16(o: ByteArrayOutputStream, v: Int): Unit = {
-    o.write((v >> 8) & 0xff); o.write(v & 0xff)
-  }
-  private def w32(o: ByteArrayOutputStream, v: Long): Unit = {
-    w16(o, ((v >> 16) & 0xffff).toInt); w16(o, (v & 0xffff).toInt)
-  }
-
   private def headTable(unitsPerEm: Int): Array[Byte] = {
     val o = new ByteArrayOutputStream(54)
-    w32(o, 0x00010000L) // version
-    w32(o, 0x00010000L) // fontRevision
-    w32(o, 0L) // checkSumAdjustment (fixture: unset)
-    w32(o, HeadMagic)
-    w16(o, 0x000B) // flags
-    w16(o, unitsPerEm)
-    (0 until 8).foreach(_ => w32(o, 0L)) // created/modified (8 bytes ea)
-    w16(o, 0); w16(o, 0); w16(o, 1000); w16(o, 700) // bbox
-    w16(o, 0); w16(o, 8); w16(o, 2) // macStyle, lowestRec, direction
-    w16(o, 0); w16(o, 0) // indexToLoc, glyphDataFormat
+    Bytes.be32(o, 0x00010000L) // version
+    Bytes.be32(o, 0x00010000L) // fontRevision
+    Bytes.be32(o, 0L) // checkSumAdjustment (fixture: unset)
+    Bytes.be32(o, HeadMagic)
+    Bytes.be16(o, 0x000B) // flags
+    Bytes.be16(o, unitsPerEm)
+    (0 until 8).foreach(_ => Bytes.be32(o, 0L)) // created/modified (8 bytes ea)
+    Bytes.be16(o, 0); Bytes.be16(o, 0); Bytes.be16(o, 1000); Bytes.be16(o, 700) // bbox
+    Bytes.be16(o, 0); Bytes.be16(o, 8); Bytes.be16(o, 2) // macStyle, lowestRec, direction
+    Bytes.be16(o, 0); Bytes.be16(o, 0) // indexToLoc, glyphDataFormat
     o.toByteArray
   }
 
   private def maxpTable(nGlyphs: Int, cff: Boolean): Array[Byte] = {
     val o = new ByteArrayOutputStream(32)
     // CFF outlines use maxp 0.5 (6 bytes), TrueType 1.0 (32 bytes)
-    w32(o, if (cff) 0x00005000L else 0x00010000L)
-    w16(o, nGlyphs)
-    if (!cff) (0 until 13).foreach(_ => w16(o, 2))
+    Bytes.be32(o, if (cff) 0x00005000L else 0x00010000L)
+    Bytes.be16(o, nGlyphs)
+    if (!cff) (0 until 13).foreach(_ => Bytes.be16(o, 2))
     o.toByteArray
   }
 
@@ -513,13 +486,13 @@ object Font {
       (3, 1, 1, family.getBytes("UTF-16BE")),
       (3, 1, 2, subfamily.getBytes("UTF-16BE")))
     val o = new ByteArrayOutputStream(64)
-    w16(o, 0) // format
-    w16(o, entries.length)
-    w16(o, 6 + 12 * entries.length) // stringOffset
+    Bytes.be16(o, 0) // format
+    Bytes.be16(o, entries.length)
+    Bytes.be16(o, 6 + 12 * entries.length) // stringOffset
     var off = 0
     entries.foreach { case (p, e, id, bytes) =>
-      w16(o, p); w16(o, e); w16(o, if (p == 3) 0x0409 else 0)
-      w16(o, id); w16(o, bytes.length); w16(o, off)
+      Bytes.be16(o, p); Bytes.be16(o, e); Bytes.be16(o, if (p == 3) 0x0409 else 0)
+      Bytes.be16(o, id); Bytes.be16(o, bytes.length); Bytes.be16(o, off)
       off += bytes.length
     }
     entries.foreach { case (_, _, _, bytes) =>
@@ -544,19 +517,19 @@ object Font {
       ("maxp", maxpTable(nGlyphs, cff = container == "otf")),
       ("name", nameTable(family, subfamily, macFamily)))
     val o = new ByteArrayOutputStream(256)
-    w32(o, if (container == "otf") 0x4F54544FL else 0x00010000L)
+    Bytes.be32(o, if (container == "otf") 0x4F54544FL else 0x00010000L)
     val n = tables.length
     val pow2 = Integer.highestOneBit(n)
-    w16(o, n)
-    w16(o, pow2 * 16) // searchRange
-    w16(o, 31 - Integer.numberOfLeadingZeros(pow2)) // entrySelector
-    w16(o, n * 16 - pow2 * 16) // rangeShift
+    Bytes.be16(o, n)
+    Bytes.be16(o, pow2 * 16) // searchRange
+    Bytes.be16(o, 31 - Integer.numberOfLeadingZeros(pow2)) // entrySelector
+    Bytes.be16(o, n * 16 - pow2 * 16) // rangeShift
     var off = 12 + 16 * n
     tables.foreach { case (tag, data) =>
       o.write(tag.getBytes("ISO-8859-1"), 0, 4)
-      w32(o, 0L) // table checksum (fixture: unset)
-      w32(o, off.toLong)
-      w32(o, data.length.toLong)
+      Bytes.be32(o, 0L) // table checksum (fixture: unset)
+      Bytes.be32(o, off.toLong)
+      Bytes.be32(o, data.length.toLong)
       off += pad4(data.length)
     }
     tables.foreach { case (_, data) =>
@@ -594,21 +567,21 @@ object Font {
     val totalLen = dataStart + packed.map(p => pad4(p._2.length)).sum
     val sfntSize = 12 + 16 * n + packed.map(p => pad4(p._3)).sum
     val o = new ByteArrayOutputStream(totalLen)
-    w32(o, 0x774F4646L) // 'wOFF'
-    w32(o, if (flavor == "otf") 0x4F54544FL else 0x00010000L)
-    w32(o, totalLen.toLong)
-    w16(o, n); w16(o, 0) // numTables, reserved
-    w32(o, sfntSize.toLong)
-    w16(o, 1); w16(o, 0) // woff version
-    w32(o, 0L); w32(o, 0L); w32(o, 0L) // meta off/len/origLen
-    w32(o, 0L); w32(o, 0L) // priv off/len
+    Bytes.be32(o, 0x774F4646L) // 'wOFF'
+    Bytes.be32(o, if (flavor == "otf") 0x4F54544FL else 0x00010000L)
+    Bytes.be32(o, totalLen.toLong)
+    Bytes.be16(o, n); Bytes.be16(o, 0) // numTables, reserved
+    Bytes.be32(o, sfntSize.toLong)
+    Bytes.be16(o, 1); Bytes.be16(o, 0) // woff version
+    Bytes.be32(o, 0L); Bytes.be32(o, 0L); Bytes.be32(o, 0L) // meta off/len/origLen
+    Bytes.be32(o, 0L); Bytes.be32(o, 0L) // priv off/len
     var off = dataStart
     packed.foreach { case (tag, comp, origLen) =>
       o.write(tag.getBytes("ISO-8859-1"), 0, 4)
-      w32(o, off.toLong)
-      w32(o, comp.length.toLong)
-      w32(o, origLen.toLong)
-      w32(o, 0L) // origChecksum (fixture: unset)
+      Bytes.be32(o, off.toLong)
+      Bytes.be32(o, comp.length.toLong)
+      Bytes.be32(o, origLen.toLong)
+      Bytes.be32(o, 0L) // origChecksum (fixture: unset)
       off += pad4(comp.length)
     }
     packed.foreach { case (_, comp, _) =>

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.{Bytes, Inflate}
 import graft.engine.Tables
 
 /** Git packfile + pack-index DECODER — pure JVM, from the public
@@ -58,47 +59,6 @@ object GitPack {
 
   private def objectSha(otype: String, content: Array[Byte]): String =
     sha1Hex(s"$otype ${content.length}".getBytes("US-ASCII") :+ 0.toByte, content)
-
-  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32
-    c.update(b, off, len)
-    c.getValue
-  }
-
-  private def u32be(b: Array[Byte], i: Int): Long = {
-    if (i + 4 > b.length) fail()
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-  }
-
-  /** Inflate one zlib stream starting at `off`; the declared
-    * uncompressed length must match exactly. Returns (data, consumed
-    * compressed bytes). */
-  private def inflateAt(b: Array[Byte], off: Int,
-      declared: Long): (Array[Byte], Int) = {
-    if (declared < 0 || declared > MaxObject) fail()
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(b, off, b.length - off)
-      val out = new Array[Byte](declared.toInt)
-      var n = 0
-      var stuck = false
-      while (n < out.length && !inf.finished() && !stuck) {
-        val k = inf.inflate(out, n, out.length - n)
-        if (k == 0 && (inf.needsInput() || inf.needsDictionary())) stuck = true
-        n += k
-      }
-      if (stuck || n != out.length) fail()
-      if (!inf.finished()) {
-        // the stream must END here — extra uncompressed bytes = corrupt
-        val extra = new Array[Byte](1)
-        if (inf.inflate(extra, 0, 1) != 0 || !inf.finished()) fail()
-      }
-      (out, (b.length - off) - inf.getRemaining)
-    } catch {
-      case _: java.util.zip.DataFormatException => fail()
-    } finally inf.end()
-  }
 
   /** git delta application (gitformat-pack: copy/insert commands). */
   private def applyDelta(base: Array[Byte],
@@ -174,9 +134,9 @@ object GitPack {
       if (pack == null || pack.length < 32) return None
       if (pack(0) != 'P' || pack(1) != 'A' || pack(2) != 'C' ||
         pack(3) != 'K') fail()
-      val version = u32be(pack, 4)
+      val version = Bytes.u32be(pack, 4)
       if (version != 2 && version != 3) fail()
-      val count = u32be(pack, 8)
+      val count = Bytes.u32be(pack, 8)
       if (count < 0 || count > (pack.length / 12) + 16) fail()
       // trailer: SHA-1 of everything before it
       val md = java.security.MessageDigest.getInstance("SHA-1")
@@ -209,10 +169,17 @@ object GitPack {
           size |= (c & 0x7fL) << shift
           shift += 7
         }
+        // the entry's zlib payload, which must inflate to exactly `size`
+        def payload(): Array[Byte] = {
+          if (size < 0) fail()
+          val z = Inflate(pack, off, pack.length - off, MaxObject, exact = size)
+            .getOrElse(fail())
+          off += z.consumed
+          z.bytes
+        }
         val (otype, content, depth) = otypeId match {
           case 1 | 2 | 3 | 4 =>
-            val (data, used) = inflateAt(pack, off, size)
-            off += used
+            val data = payload()
             (typeNames(otypeId), data, 0)
           case 6 => // ofs_delta: +1-biased big-endian varint, negative
             if (off >= pack.length - 20) fail()
@@ -229,8 +196,7 @@ object GitPack {
             if (baseOff < 12 || baseOff >= entryStart) fail()
             val base = byOffset.getOrElse(baseOff, fail())
             if (base._3 >= 64) fail() // chain depth bound (git's limit)
-            val (delta, used) = inflateAt(pack, off, size)
-            off += used
+            val delta = payload()
             (base._1, applyDelta(base._2, delta), base._3 + 1)
           case 7 => // ref_delta: 20-byte base id
             if (off + 20 > pack.length - 20) fail()
@@ -239,8 +205,7 @@ object GitPack {
             off += 20
             val base = bySha.getOrElse(sha, fail()) // thin pack → reject
             if (base._3 >= 64) fail()
-            val (delta, used) = inflateAt(pack, off, size)
-            off += used
+            val delta = payload()
             (base._1, applyDelta(base._2, delta), base._3 + 1)
           case _ => fail()
         }
@@ -248,7 +213,7 @@ object GitPack {
         byOffset(entryStart.toLong) = ((otype, content, depth))
         bySha(sha) = ((otype, content, depth))
         out += ((PackObject(sha, otype, content.length.toLong, depth,
-          entryStart.toLong, crc32(pack, entryStart, off - entryStart)),
+          entryStart.toLong, Bytes.crc32(pack, entryStart, off - entryStart)),
           content))
         k += 1
       }
@@ -270,8 +235,8 @@ object GitPack {
       if (idx == null || idx.length < 8 + 1024 + 40) return None
       if ((idx(0) & 0xff) != 0xff || idx(1) != 't' || idx(2) != 'O' ||
         idx(3) != 'c') fail()
-      if (u32be(idx, 4) != 2) fail()
-      val fanout = Array.tabulate(256)(i => u32be(idx, 8 + 4 * i))
+      if (Bytes.u32be(idx, 4) != 2) fail()
+      val fanout = Array.tabulate(256)(i => Bytes.u32be(idx, 8 + 4 * i))
       var i = 1
       while (i < 256) { if (fanout(i) < fanout(i - 1)) fail(); i += 1 }
       val n = fanout(255)
@@ -304,15 +269,15 @@ object GitPack {
         val lo = if (fb == 0) 0L else fanout(fb - 1)
         if (e < lo || e >= fanout(fb)) fail()
         prev = sha
-        val crc = u32be(idx, (crcAt + 4 * e).toInt)
-        val o32 = u32be(idx, (offAt + 4 * e).toInt)
+        val crc = Bytes.u32be(idx, (crcAt + 4 * e).toInt)
+        val o32 = Bytes.u32be(idx, (offAt + 4 * e).toInt)
         val offv =
           if ((o32 & 0x80000000L) == 0) o32
           else {
             val li = o32 & 0x7fffffffL
             if (li >= nLarge) fail()
             val at8 = (largeAt + 8 * li).toInt
-            (u32be(idx, at8) << 32) | u32be(idx, at8 + 4)
+            (Bytes.u32be(idx, at8) << 32) | Bytes.u32be(idx, at8 + 4)
           }
         out += ((sha, offv, crc))
         e += 1
@@ -481,25 +446,21 @@ object GitPack {
       val out = new ByteArrayOutputStream(1024)
       out.write(0xff); out.write('t'); out.write('O'); out.write('c')
       out.write(Array[Byte](0, 0, 0, 2), 0, 4)
-      def be32(v: Long): Unit = {
-        var k = 3
-        while (k >= 0) { out.write(((v >>> (8 * k)) & 0xff).toInt); k -= 1 }
-      }
       var cum = 0
       (0 until 256).foreach { fb =>
         cum += sorted.count(o => Integer.parseInt(o.sha.take(2), 16) == fb)
-        be32(cum.toLong)
+        Bytes.be32(out, cum.toLong)
       }
       sorted.foreach(o =>
         o.sha.grouped(2).foreach(h => out.write(Integer.parseInt(h, 16))))
-      sorted.foreach(o => be32(o.crc32))
+      sorted.foreach(o => Bytes.be32(out, o.crc32))
       val large = Vector.newBuilder[Long]
       var nLarge = 0
       sorted.foreach { o =>
-        if (o.offset <= 0x7fffffffL) be32(o.offset)
-        else { be32(0x80000000L | nLarge); large += o.offset; nLarge += 1 }
+        if (o.offset <= 0x7fffffffL) Bytes.be32(out, o.offset)
+        else { Bytes.be32(out, 0x80000000L | nLarge); large += o.offset; nLarge += 1 }
       }
-      large.result().foreach { v => be32(v >>> 32); be32(v & 0xffffffffL) }
+      large.result().foreach { v => Bytes.be32(out, v >>> 32); Bytes.be32(out, v & 0xffffffffL) }
       out.write(pack, pack.length - 20, 20) // pack trailer checksum
       val md = java.security.MessageDigest.getInstance("SHA-1")
       md.update(out.toByteArray)
@@ -518,40 +479,20 @@ object GitPack {
     * compressed garbage → None. */
   def looseObject(b: Array[Byte]): Option[(String, String, Array[Byte])] = {
     if (b == null || b.length < 8) return None
-    inflateAll(b, MaxObject).flatMap { raw =>
-      val nul = raw.indexOf(0.toByte)
-      if (nul <= 0 || nul > 31) return None
-      val hdr = new String(raw, 0, nul, "US-ASCII")
-      val sp = hdr.indexOf(' ')
-      if (sp <= 0) return None
-      val otype = hdr.substring(0, sp)
-      if (!typeNames.values.exists(_ == otype)) return None
-      val size = hdr.substring(sp + 1).toLongOption.getOrElse(return None)
-      if (size != raw.length - nul - 1) return None
-      val content = java.util.Arrays.copyOfRange(raw, nul + 1, raw.length)
-      Some((objectSha(otype, content), otype, content))
-    }
-  }
-
-  private def inflateAll(b: Array[Byte], cap: Int): Option[Array[Byte]] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(b, 0, b.length)
-      val out = new ByteArrayOutputStream(math.min(b.length * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      var stuck = false
-      while (!inf.finished() && !stuck) {
-        val k = inf.inflate(buf, 0, buf.length)
-        if (k == 0 && (inf.needsInput() || inf.needsDictionary())) stuck = true
-        else {
-          out.write(buf, 0, k)
-          if (out.size > cap) return None
-        }
-      }
-      if (stuck || inf.getRemaining != 0) None else Some(out.toByteArray)
-    } catch {
-      case _: java.util.zip.DataFormatException => None
-    } finally inf.end()
+    val z = Inflate(b, 0, b.length, MaxObject).getOrElse(return None)
+    if (z.consumed != b.length) return None // trailing garbage
+    val raw = z.bytes
+    val nul = raw.indexOf(0.toByte)
+    if (nul <= 0 || nul > 31) return None
+    val hdr = new String(raw, 0, nul, "US-ASCII")
+    val sp = hdr.indexOf(' ')
+    if (sp <= 0) return None
+    val otype = hdr.substring(0, sp)
+    if (!typeNames.values.exists(_ == otype)) return None
+    val size = hdr.substring(sp + 1).toLongOption.getOrElse(return None)
+    if (size != raw.length - nul - 1) return None
+    val content = java.util.Arrays.copyOfRange(raw, nul + 1, raw.length)
+    Some((objectSha(otype, content), otype, content))
   }
 
   /** Emit a loose object for fixtures. */

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.codec.Bytes
+
 /** Pure-JVM ICO (Windows icon) codec — the favicon container, a
   * non-trivial image population of any web crawl (nearly every site
   * root serves one). Public spec: the ICONDIR/ICONDIRENTRY layout
@@ -26,11 +28,6 @@ object Ico {
   final case class IcoImage(nEntries: Int, entryFormat: String,
       width: Int, height: Int, luma: Array[Int])
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    u16le(b, i).toLong | (u16le(b, i + 2).toLong << 16)
-
   private def isPng(b: Array[Byte]): Boolean =
     b.length >= 8 && b(0) == 0x89.toByte && b(1) == 'P' && b(2) == 'N' &&
       b(3) == 'G'
@@ -38,8 +35,8 @@ object Ico {
   def decodeIco(b: Array[Byte]): Option[IcoImage] =
     try {
       if (b == null || b.length < 22) return None
-      if (b(0) != 0 || b(1) != 0 || u16le(b, 2) != 1) return None
-      val n = u16le(b, 4)
+      if (b(0) != 0 || b(1) != 0 || Bytes.u16le(b, 2) != 1) return None
+      val n = Bytes.u16le(b, 4)
       if (n < 1 || 6 + 16L * n > b.length) return None
       // largest directory dims win (0 encodes 256); ties keep the first
       var best = 0
@@ -53,8 +50,8 @@ object Ico {
         i += 1
       }
       val e = 6 + 16 * best
-      val len = u32le(b, e + 8)
-      val off = u32le(b, e + 12)
+      val len = Bytes.u32le(b, e + 8)
+      val off = Bytes.u32le(b, e + 12)
       if (off < 6 + 16L * n || len < 16 || off + len > b.length) return None
       val img = java.util.Arrays.copyOfRange(b, off.toInt, (off + len).toInt)
       if (isPng(img))
@@ -64,26 +61,21 @@ object Ico {
       else {
         // headerless DIB: biHeight covers XOR + AND mask → halve it,
         // wrap in a 'BM' file header pointing past header + palette
-        val biSize = u32le(img, 0)
+        val biSize = Bytes.u32le(img, 0)
         if (biSize < 40 || img.length < biSize) return None
-        val h2 = u32le(img, 8)
+        val h2 = Bytes.u32le(img, 8)
         if (h2 <= 0 || h2 % 2 != 0) return None // doubled height, bottom-up
         val h = h2 / 2
-        if (u16le(img, 14) != 8) return None // 8-bit palette subset
-        var palSize = u32le(img, 32)
+        if (Bytes.u16le(img, 14) != 8) return None // 8-bit palette subset
+        var palSize = Bytes.u32le(img, 32)
         if (palSize == 0) palSize = 256
         val offBits = 14 + biSize + palSize * 4
         val bmp = new Array[Byte](14 + img.length)
         bmp(0) = 'B'; bmp(1) = 'M'
-        def w32(at: Int, v: Long): Unit = {
-          bmp(at) = (v & 0xff).toByte; bmp(at + 1) = ((v >> 8) & 0xff).toByte
-          bmp(at + 2) = ((v >> 16) & 0xff).toByte
-          bmp(at + 3) = ((v >> 24) & 0xff).toByte
-        }
-        w32(2, 14L + img.length)
-        w32(10, offBits)
+        Bytes.putLe32(bmp, 2, 14L + img.length)
+        Bytes.putLe32(bmp, 10, offBits)
         System.arraycopy(img, 0, bmp, 14, img.length)
-        w32(14 + 8, h) // un-double biHeight
+        Bytes.putLe32(bmp, 14 + 8, h) // un-double biHeight
         Pixels.decodeGrayBmp(bmp).map { case (w, dh, px) =>
           IcoImage(n, "dib", w, dh, px)
         }
@@ -101,15 +93,12 @@ object Ico {
     val entries = blobs.map { blob =>
       if (isPng(blob)) {
         // IHDR dims: big-endian u32s at offsets 16/20
-        def be32(i: Int): Int =
-          ((blob(i) & 0xff) << 24) | ((blob(i + 1) & 0xff) << 16) |
-            ((blob(i + 2) & 0xff) << 8) | (blob(i + 3) & 0xff)
-        (be32(16), be32(20), 32, blob)
+        (Bytes.i32be(blob, 16), Bytes.i32be(blob, 20), 32, blob)
       } else {
         require(blob.length >= 54 && blob(0) == 'B' && blob(1) == 'M',
           "entry must be PNG or BMP")
-        val w = u32le(blob, 18).toInt
-        val h = u32le(blob, 22).toInt
+        val w = Bytes.u32le(blob, 18).toInt
+        val h = Bytes.u32le(blob, 22).toInt
         val dib = java.util.Arrays.copyOfRange(blob, 14, blob.length)
         // double the height over XOR + AND mask
         val h2 = 2L * h
@@ -126,19 +115,15 @@ object Ico {
     }
     val out = new ByteArrayOutputStream(
       6 + entries.size * 16 + entries.map(_._4.length).sum)
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Long): Unit = {
-      w16((v & 0xffff).toInt); w16(((v >> 16) & 0xffff).toInt)
-    }
-    w16(0); w16(1); w16(entries.size)
+    Bytes.le16(out, 0); Bytes.le16(out, 1); Bytes.le16(out, entries.size)
     var off = 6L + entries.size * 16
     entries.foreach { case (w, h, bits, data) =>
       out.write(if (w == 256) 0 else w)
       out.write(if (h == 256) 0 else h)
       out.write(0); out.write(0) // colorCount (0 = 256+), reserved
-      w16(1); w16(bits)
-      w32(data.length.toLong)
-      w32(off)
+      Bytes.le16(out, 1); Bytes.le16(out, bits)
+      Bytes.le32(out, data.length.toLong)
+      Bytes.le32(out, off)
       off += data.length
     }
     entries.foreach { case (_, _, _, data) => out.write(data, 0, data.length) }

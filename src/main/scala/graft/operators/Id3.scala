@@ -2,6 +2,7 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.codec.Bytes
 import graft.engine.Tables
 
 /** ID3v2 tag parsing — the metadata walk `AudioHeaders.decodeMp3` only
@@ -31,10 +32,6 @@ object Id3 {
   private def readSyncsafe(b: Array[Byte], off: Int): Int =
     ((b(off) & 0x7f) << 21) | ((b(off + 1) & 0x7f) << 14) |
       ((b(off + 2) & 0x7f) << 7) | (b(off + 3) & 0x7f)
-
-  private def readBe32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
 
   /** Byte-valid ID3v2.3 or v2.4 tag: header with syncsafe total size,
     * text frames (encoding byte 0 = ISO-8859-1), `padding` zero bytes.
@@ -177,7 +174,7 @@ object Id3 {
           val fid = new String(bytes2, off, 4, "US-ASCII")
           if (!fid.forall(c => c.isUpper || c.isDigit)) return None
           val fsize = if (version == 4) readSyncsafe(bytes2, off + 4)
-          else readBe32(bytes2, off + 4)
+          else Bytes.i32be(bytes2, off + 4)
           if (fsize < 0 || off + 10 + fsize > end) return None
           if (fid.startsWith("T") && fsize >= 1) {
             // v2.4 format flags: 0x01 data-length indicator (leading

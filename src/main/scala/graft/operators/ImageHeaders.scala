@@ -1,7 +1,8 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.CRC32
+
+import graft.codec.Bytes
 
 /** Pure-JVM image header codec: parse (and, for fixtures, emit) the
   * metadata-bearing prefix of PNG and JPEG streams — no codec libraries,
@@ -38,12 +39,6 @@ object ImageHeaders {
   private val PngSig: Array[Byte] =
     Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-  private def be32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-      (u8(b, i + 2) << 8) | u8(b, i + 3)
-
   /** Sniff-and-parse: PNG first (unambiguous signature), then JPEG,
     * then GIF/BMP (fixed-offset headers), then WEBP (RIFF container),
     * then TIFF ([[TiffHeaders]] — II/MM order mark + IFD walk), then
@@ -54,14 +49,6 @@ object ImageHeaders {
       .orElse(decodeWebp(b))
       .orElse(TiffHeaders.decodeTiff(b))
       .orElse(VideoHeaders.decodeAvif(b))
-
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u24le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xff).toLong | ((b(i + 1) & 0xff).toLong << 8) |
-      ((b(i + 2) & 0xff).toLong << 16) | ((b(i + 3) & 0xff).toLong << 24)
 
   /** WEBP (public spec, RFC 9649 / Google container spec): 'RIFF' +
     * u32 LE size + 'WEBP', then a chunk chain of (4-byte id, u32 LE
@@ -85,31 +72,31 @@ object ImageHeaders {
     var off = 12
     while (off + 8 <= b.length) {
       val id = new String(b, off, 4, "US-ASCII")
-      val size = u32le(b, off + 4)
+      val size = Bytes.u32le(b, off + 4)
       if (size < 0) return None
       val p = off + 8
       id match {
         case "VP8 " =>
           if (size < 10 || p + 10 > b.length) return None
           // keyframe start code; an interframe-first stream is malformed
-          if (u8(b, p + 3) != 0x9d || u8(b, p + 4) != 0x01 ||
-            u8(b, p + 5) != 0x2a) return None
-          val w = u16le(b, p + 6) & 0x3fff
-          val h = u16le(b, p + 8) & 0x3fff
+          if (Bytes.u8(b, p + 3) != 0x9d || Bytes.u8(b, p + 4) != 0x01 ||
+            Bytes.u8(b, p + 5) != 0x2a) return None
+          val w = Bytes.u16le(b, p + 6) & 0x3fff
+          val h = Bytes.u16le(b, p + 8) & 0x3fff
           if (w == 0 || h == 0) return None
           return Some(ImageMeta("webp", w, h, 8))
         case "VP8L" =>
           if (size < 5 || p + 5 > b.length) return None
-          if (u8(b, p) != 0x2f) return None
-          val bits = u32le(b, p + 1)
+          if (Bytes.u8(b, p) != 0x2f) return None
+          val bits = Bytes.u32le(b, p + 1)
           if (((bits >> 29) & 0x7) != 0) return None // version must be 0
           val w = (bits & 0x3fff).toInt + 1
           val h = ((bits >> 14) & 0x3fff).toInt + 1
           return Some(ImageMeta("webp_lossless", w, h, 8))
         case "VP8X" =>
           if (size < 10 || p + 10 > b.length) return None
-          val w = u24le(b, p + 4) + 1
-          val h = u24le(b, p + 7) + 1
+          val w = Bytes.u24le(b, p + 4) + 1
+          val h = Bytes.u24le(b, p + 7) + 1
           return Some(ImageMeta("webp_extended", w, h, 8))
         case _ => () // unknown chunk: hop by size
       }
@@ -140,8 +127,8 @@ object ImageHeaders {
     // the spec fixes the VP8X payload at exactly 10 bytes; accepting a
     // larger declared size while hopping a hard-coded 10 would desync
     // the chunk walk into the payload
-    if (u32le(b, 16) != 10) return None
-    val flags = u8(b, 20)
+    if (Bytes.u32le(b, 16) != 10) return None
+    val flags = Bytes.u8(b, 20)
     val wantExif = (flags & 0x08) != 0
     val wantXmp = (flags & 0x04) != 0
     var exif: Option[TiffHeaders.ExifMeta] = None
@@ -149,7 +136,7 @@ object ImageHeaders {
     var off = 20 + 10 // past the VP8X payload
     while (off + 8 <= b.length) {
       val id = new String(b, off, 4, "US-ASCII")
-      val size = u32le(b, off + 4)
+      val size = Bytes.u32le(b, off + 4)
       if (size < 0) return None
       val p = off + 8
       if (p + size > b.length) return None
@@ -188,25 +175,17 @@ object ImageHeaders {
     val xmpBytes = xmp.getBytes("UTF-8")
     val out = new java.io.ByteArrayOutputStream(exifPayload.length + 96)
     def ascii(s: String): Unit = out.write(s.getBytes("US-ASCII"), 0, 4)
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    def le24(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff)
-    }
     def chunk(id: String, payload: Array[Byte]): Unit = {
-      ascii(id); le32(payload.length.toLong)
+      ascii(id); Bytes.le32(out, payload.length.toLong)
       out.write(payload, 0, payload.length)
       if (payload.length % 2 == 1) out.write(0) // RIFF pad byte
     }
-    ascii("RIFF"); le32(0) // size patched below
+    ascii("RIFF"); Bytes.le32(out, 0) // size patched below
     ascii("WEBP")
-    ascii("VP8X"); le32(10L)
+    ascii("VP8X"); Bytes.le32(out, 10L)
     out.write(0x08 | (if (xmpBytes.nonEmpty) 0x04 else 0)) // EXIF [+XMP]
     out.write(0); out.write(0); out.write(0) // reserved
-    le24(width - 1); le24(height - 1)
+    Bytes.le24(out, width - 1); Bytes.le24(out, height - 1)
     chunk("EXIF", exifPayload)
     if (xmpBytes.nonEmpty) chunk("XMP ", xmpBytes)
     // minimal VP8L header (signature + dims bits) so decodeWebp works
@@ -236,8 +215,8 @@ object ImageHeaders {
     if (b == null || b.length < 11) return None
     val sig = new String(b, 0, 6, "US-ASCII")
     if (sig != "GIF87a" && sig != "GIF89a") return None
-    val w = (b(6) & 0xff) | ((b(7) & 0xff) << 8)
-    val h = (b(8) & 0xff) | ((b(9) & 0xff) << 8)
+    val w = Bytes.u16le(b, 6)
+    val h = Bytes.u16le(b, 8)
     if (w == 0 || h == 0) return None
     val depth = (((b(10) >> 4) & 0x07) + 1) // color resolution, bits/primary
     Some(ImageMeta("gif", w, h, depth))
@@ -249,14 +228,11 @@ object ImageHeaders {
   def decodeBmp(b: Array[Byte]): Option[ImageMeta] = {
     if (b == null || b.length < 30) return None
     if (b(0) != 'B'.toByte || b(1) != 'M'.toByte) return None
-    def i32le(i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-        ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-    val hdrSize = i32le(14)
+    val hdrSize = Bytes.i32le(b, 14)
     if (hdrSize < 40) return None // BITMAPCOREHEADER etc. out of scope
-    val w = i32le(18)
-    val h = i32le(22)
-    val bits = (b(28) & 0xff) | ((b(29) & 0xff) << 8)
+    val w = Bytes.i32le(b, 18)
+    val h = Bytes.i32le(b, 22)
+    val bits = Bytes.u16le(b, 28)
     if (w <= 0 || h == 0) return None
     // BMP-legal bit counts only — a zero/garbage depth field is as
     // malformed as a zero dimension (the sibling decoders' discipline)
@@ -273,18 +249,18 @@ object ImageHeaders {
     // IHDR must be first per spec, but walk the chain anyway so a
     // spec-violating-but-parseable stream still yields its header
     while (off + 8 <= b.length) {
-      val len = be32(b, off)
+      val len = Bytes.u32be(b, off)
       // a declared length that cannot fit in the remaining buffer is
       // malformed — and advancing by it could overflow the Int offset
       // into negative territory (index crash, not a clean None)
       if (len < 0 || len > b.length - off - 8) return None
-      val isIhdr = u8(b, off + 4) == 'I' && u8(b, off + 5) == 'H' &&
-        u8(b, off + 6) == 'D' && u8(b, off + 7) == 'R'
+      val isIhdr = Bytes.u8(b, off + 4) == 'I' && Bytes.u8(b, off + 5) == 'H' &&
+        Bytes.u8(b, off + 6) == 'D' && Bytes.u8(b, off + 7) == 'R'
       if (isIhdr) {
         if (len < 13 || off + 8 + 13 > b.length) return None
-        val w = be32(b, off + 8)
-        val h = be32(b, off + 12)
-        val depth = u8(b, off + 16)
+        val w = Bytes.u32be(b, off + 8)
+        val h = Bytes.u32be(b, off + 12)
+        val depth = Bytes.u8(b, off + 16)
         if (w <= 0 || h <= 0 || w > Int.MaxValue || h > Int.MaxValue)
           return None
         return Some(ImageMeta("png", w.toInt, h.toInt, depth))
@@ -296,30 +272,30 @@ object ImageHeaders {
 
   def decodeJpeg(b: Array[Byte]): Option[ImageMeta] = {
     if (b == null || b.length < 4 ||
-      u8(b, 0) != 0xff || u8(b, 1) != 0xd8) return None
+      Bytes.u8(b, 0) != 0xff || Bytes.u8(b, 1) != 0xd8) return None
     var off = 2
     while (off + 2 <= b.length) {
-      if (u8(b, off) != 0xff) return None
+      if (Bytes.u8(b, off) != 0xff) return None
       var mOff = off + 1
       // fill bytes: any number of 0xFF may pad before the marker id
-      while (mOff < b.length && u8(b, mOff) == 0xff) mOff += 1
+      while (mOff < b.length && Bytes.u8(b, mOff) == 0xff) mOff += 1
       if (mOff >= b.length) return None
-      val marker = u8(b, mOff)
+      val marker = Bytes.u8(b, mOff)
       if (marker == 0xd9 || marker == 0xda) return None // EOI/SOS: no SOF seen
       if ((marker >= 0xd0 && marker <= 0xd7) || marker == 0x01) {
         off = mOff + 1 // RSTn / TEM: standalone, no length field
       } else {
         if (mOff + 3 > b.length) return None // need the u16 length field
-        val len = be16(b, mOff + 1)
+        val len = Bytes.u16be(b, mOff + 1)
         if (len < 2) return None
         val isSof = marker >= 0xc0 && marker <= 0xcf &&
           marker != 0xc4 && marker != 0xc8 && marker != 0xcc
         if (isSof) {
           // segment payload: precision u8, height u16, width u16, ncomp u8
           if (mOff + 3 + 5 > b.length) return None
-          val depth = u8(b, mOff + 3)
-          val h = be16(b, mOff + 4)
-          val w = be16(b, mOff + 6)
+          val depth = Bytes.u8(b, mOff + 3)
+          val h = Bytes.u16be(b, mOff + 4)
+          val w = Bytes.u16be(b, mOff + 6)
           if (w == 0 || h == 0) return None
           val fmt = if (marker == 0xc2) "jpeg_progressive" else "jpeg"
           return Some(ImageMeta(fmt, w, h, depth))
@@ -344,11 +320,11 @@ object ImageHeaders {
     val out = new ByteArrayOutputStream(payload.length + 64)
     out.write(PngSig, 0, PngSig.length)
     val ihdr = new Array[Byte](13)
-    putBe32(ihdr, 0, width); putBe32(ihdr, 4, height)
+    Bytes.putBe32(ihdr, 0, width); Bytes.putBe32(ihdr, 4, height)
     ihdr(8) = bitDepth.toByte; ihdr(9) = 2 // color type 2 = truecolor
-    writeChunk(out, "IHDR", ihdr)
-    writeChunk(out, "IDAT", payload)
-    writeChunk(out, "IEND", Array.emptyByteArray)
+    Pixels.writeChunk(out, "IHDR", ihdr)
+    Pixels.writeChunk(out, "IDAT", payload)
+    Pixels.writeChunk(out, "IEND", Array.emptyByteArray)
     out.toByteArray
   }
 
@@ -424,62 +400,32 @@ object ImageHeaders {
       s"$variant dims limited to $dimCap, got ${width}x$height")
     val out = new ByteArrayOutputStream(note.length + 48)
     def ascii(s: String): Unit = out.write(s.getBytes("US-ASCII"), 0, 4)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le24(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff)
-    }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
     val noteChunk = 8 + note.length + (note.length & 1)
     val imgChunk = variant match {
       case "vp8" => 18; case "vp8l" => 14; case "vp8x" => 18
     }
-    ascii("RIFF"); le32(4L + noteChunk + imgChunk); ascii("WEBP")
-    ascii("EXIF"); le32(note.length.toLong)
+    ascii("RIFF"); Bytes.le32(out, 4L + noteChunk + imgChunk); ascii("WEBP")
+    ascii("EXIF"); Bytes.le32(out, note.length.toLong)
     out.write(note, 0, note.length)
     if ((note.length & 1) == 1) out.write(0) // RIFF even padding
     variant match {
       case "vp8" =>
-        ascii("VP8 "); le32(10L)
+        ascii("VP8 "); Bytes.le32(out, 10L)
         out.write(0x30); out.write(0); out.write(0) // frame tag (keyframe)
         out.write(0x9d); out.write(0x01); out.write(0x2a) // start code
-        le16(width); le16(height)
+        Bytes.le16(out, width); Bytes.le16(out, height)
       case "vp8l" =>
-        ascii("VP8L"); le32(5L)
+        ascii("VP8L"); Bytes.le32(out, 5L)
         out.write(0x2f)
-        le32(((width - 1).toLong & 0x3fff) |
+        Bytes.le32(out, ((width - 1).toLong & 0x3fff) |
           (((height - 1).toLong & 0x3fff) << 14))
         out.write(0) // 5 is odd: RIFF even padding
       case "vp8x" =>
-        ascii("VP8X"); le32(10L)
-        le32(0L) // flags + reserved
-        le24(width - 1); le24(height - 1)
+        ascii("VP8X"); Bytes.le32(out, 10L)
+        Bytes.le32(out, 0L) // flags + reserved
+        Bytes.le24(out, width - 1); Bytes.le24(out, height - 1)
     }
     out.toByteArray
   }
 
-  private def putBe32(b: Array[Byte], i: Int, v: Int): Unit = {
-    b(i) = ((v >>> 24) & 0xff).toByte
-    b(i + 1) = ((v >>> 16) & 0xff).toByte
-    b(i + 2) = ((v >>> 8) & 0xff).toByte
-    b(i + 3) = (v & 0xff).toByte
-  }
-
-  private def writeChunk(out: ByteArrayOutputStream, typ: String,
-      payload: Array[Byte]): Unit = {
-    val len = new Array[Byte](4)
-    putBe32(len, 0, payload.length)
-    out.write(len, 0, 4)
-    val t = typ.getBytes("US-ASCII")
-    out.write(t, 0, 4)
-    out.write(payload, 0, payload.length)
-    val crc = new CRC32()
-    crc.update(t); crc.update(payload)
-    val c = new Array[Byte](4)
-    putBe32(c, 0, crc.getValue.toInt)
-    out.write(c, 0, 4)
-  }
 }

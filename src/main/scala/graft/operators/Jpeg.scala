@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.codec.Bytes
 import graft.engine.Tables
 
 /** JPEG decode — DQT quantization tables, DHT canonical Huffman
@@ -179,9 +180,6 @@ object Jpeg {
     out
   }
 
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-
   /** One frame component and its decode state. */
   private final class Comp(val id: Int, val h: Int, val v: Int, val tq: Int) {
     var coefs: Array[Int] = null // natural-order, blockIndex*64 strided
@@ -229,7 +227,7 @@ object Jpeg {
           off += 2 // standalone markers
         } else {
           if (off + 4 > bytes.length) return None
-          val len = be16(bytes, off + 2)
+          val len = Bytes.u16be(bytes, off + 2)
           if (len < 2 || off + 2 + len > bytes.length) return None
           marker match {
             case 0xdb => // DQT (possibly several tables per segment)
@@ -264,7 +262,7 @@ object Jpeg {
               if (comps != null) return None // one frame only
               progressive = marker == 0xc2
               if ((bytes(off + 4) & 0xff) != 8) return None // 8-bit only
-              h = be16(bytes, off + 5); w = be16(bytes, off + 7)
+              h = Bytes.u16be(bytes, off + 5); w = Bytes.u16be(bytes, off + 7)
               val nc = bytes(off + 9) & 0xff
               if (nc != 1 && nc != 3) return None
               if (w <= 0 || h <= 0 || w.toLong * h > (1 << 26)) return None
@@ -296,7 +294,7 @@ object Jpeg {
               return None // extended/lossless/arithmetic out of contract
             case 0xdd =>
               if (len != 4) return None
-              restartInterval = be16(bytes, off + 4)
+              restartInterval = Bytes.u16be(bytes, off + 4)
             case 0xda => // SOS — decode one scan's entropy data
               if (comps == null) return None
               val ns = bytes(off + 4) & 0xff

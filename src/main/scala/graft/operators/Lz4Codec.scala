@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.Bytes
 import graft.engine.Tables
 
 /** LZ4 block + frame DECODER — pure JVM, from the public specs
@@ -71,7 +72,7 @@ object Lz4Codec {
         }
         // match
         if (i + 2 > end) return None
-        val offset = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+        val offset = Bytes.u16le(b, i)
         i += 2
         if (offset == 0 || offset > n) return None
         var matchLen = (token & 0x0f) + 4
@@ -108,10 +109,6 @@ object Lz4Codec {
     out.toByteArray
   }
 
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   /** Full frame decode: one or more frames (content frames +
     * skippable frames), every checksum verified. */
   def lz4Decompress(b: Array[Byte], maxOut: Int = MaxOut): Option[Array[Byte]] = {
@@ -122,11 +119,11 @@ object Lz4Codec {
     try {
       while (i < b.length) {
         if (i + 4 > b.length) return None
-        val magic = u32le(b, i)
+        val magic = Bytes.u32le(b, i)
         if ((magic & 0xfffffff0L) == 0x184d2a50L) {
           // skippable frame
           if (i + 8 > b.length) return None
-          val sz = u32le(b, i + 4)
+          val sz = Bytes.u32le(b, i + 4)
           if (sz > b.length - i - 8) return None
           i += 8 + sz.toInt
         } else if (magic == 0x184d2204L) {
@@ -160,7 +157,7 @@ object Lz4Codec {
           var endMark = false
           while (!endMark) {
             if (i + 4 > b.length) return None
-            val word = u32le(b, i)
+            val word = Bytes.u32le(b, i)
             i += 4
             if (word == 0L) endMark = true
             else {
@@ -180,7 +177,7 @@ object Lz4Codec {
               if (hasBlockChecksums) {
                 if (i + blen + 4 > b.length) return None
                 if ((Compression.xxh32(b, i, blen) & 0xffffffffL) !=
-                  u32le(b, i + blen)) return None
+                  Bytes.u32le(b, i + blen)) return None
                 i += blen + 4
               } else i += blen
             }
@@ -191,7 +188,7 @@ object Lz4Codec {
             if (i + 4 > b.length) return None
             val whole = out.toByteArray
             if ((Compression.xxh32(whole, frameStart, produced) &
-              0xffffffffL) != u32le(b, i)) return None
+              0xffffffffL) != Bytes.u32le(b, i)) return None
             i += 4
           }
         } else return None
@@ -209,18 +206,12 @@ object Lz4Codec {
       blockChecksums: Boolean = false): Array[Byte] = {
     require(blockMaxCode >= 4 && blockMaxCode <= 7)
     val out = new ByteArrayOutputStream(payload.length + 64)
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    le32(0x184d2204L)
+    Bytes.le32(out, 0x184d2204L)
     val flg = 0x40 | 0x20 | 0x08 | (if (contentChecksum) 0x04 else 0) |
       (if (blockChecksums) 0x10 else 0)
     out.write(flg)
     out.write(blockMaxCode << 4)
-    var v = payload.length.toLong
-    var k = 0
-    while (k < 8) { out.write((v & 0xff).toInt); v >>= 8; k += 1 }
+    Bytes.le64(out, payload.length.toLong)
     val desc = out.toByteArray
     out.write((Compression.xxh32(desc, 4, desc.length - 4) >>> 8) & 0xff)
     val blockMax = (64 << ((blockMaxCode - 4) * 2)) * 1024
@@ -231,15 +222,15 @@ object Lz4Codec {
       val n = math.min(blockMax - blockMax / 255 - 16, payload.length - off)
       val block = lz4CompressBlockLiteral(
         java.util.Arrays.copyOfRange(payload, off, off + n))
-      le32(block.length.toLong) // compressed block (high bit clear)
+      Bytes.le32(out, block.length.toLong) // compressed block (high bit clear)
       out.write(block, 0, block.length)
       if (blockChecksums)
-        le32(Compression.xxh32(block, 0, block.length) & 0xffffffffL)
+        Bytes.le32(out, Compression.xxh32(block, 0, block.length) & 0xffffffffL)
       off += n
     }
-    le32(0L)
+    Bytes.le32(out, 0L)
     if (contentChecksum)
-      le32(Compression.xxh32(payload, 0, payload.length) & 0xffffffffL)
+      Bytes.le32(out, Compression.xxh32(payload, 0, payload.length) & 0xffffffffL)
     out.toByteArray
   }
 

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.{Bytes, Inflate, MsbBitReader}
 import graft.engine.Tables
 
 /** ORC column reader — from the public ORC v1 specification
@@ -42,14 +43,14 @@ object Orc {
       f: (Int, Int, Long, Int, Int) => Unit): Boolean = {
     var i = from
     while (i < until) {
-      val tag = Protobuf.varint(b, i).getOrElse(return false)
+      val tag = Bytes.varint(b, i).getOrElse(return false)
       i = tag._2
       val no = (tag._1 >>> 3).toInt
       val wt = (tag._1 & 7).toInt
       if (no <= 0) return false
       wt match {
         case 0 =>
-          val v = Protobuf.varint(b, i).getOrElse(return false)
+          val v = Bytes.varint(b, i).getOrElse(return false)
           f(no, 0, v._1, 0, 0)
           i = v._2
         case 1 =>
@@ -57,7 +58,7 @@ object Orc {
           f(no, 1, 0L, i, 8)
           i += 8
         case 2 =>
-          val len = Protobuf.varint(b, i).getOrElse(return false)
+          val len = Bytes.varint(b, i).getOrElse(return false)
           if (len._1 < 0 || len._1 > until - len._2) return false
           f(no, 2, len._1, len._2, len._1.toInt)
           i = len._2 + len._1.toInt
@@ -73,23 +74,6 @@ object Orc {
 
   // ---- chunked compression --------------------------------------------
 
-  private def inflateRaw(b: Array[Byte], off: Int, len: Int): Option[Array[Byte]] =
-    try {
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(b, off, len)
-      val out = new ByteArrayOutputStream(len * 3)
-      val buf = new Array[Byte](8192)
-      var stuck = false
-      while (!inf.finished() && !stuck) {
-        val k = inf.inflate(buf)
-        if (k == 0 && inf.needsInput()) stuck = true else out.write(buf, 0, k)
-        if (out.size > (1 << 26)) stuck = true
-      }
-      val ok = inf.finished()
-      inf.end()
-      if (ok) Some(out.toByteArray) else None
-    } catch { case _: Exception => None }
-
   /** Decode one (possibly chunk-framed) stream region. kind: 0 NONE,
     * 1 ZLIB, 2 SNAPPY, 5 ZSTD. */
   private def decodeStream(b: Array[Byte], off: Int, len: Int,
@@ -102,8 +86,7 @@ object Orc {
     val end = off + len
     while (i < end) {
       if (i + 3 > end) return None
-      val h = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-        ((b(i + 2) & 0xff) << 16)
+      val h = Bytes.u24le(b, i)
       val original = (h & 1) == 1
       val clen = h >>> 1
       i += 3
@@ -111,7 +94,7 @@ object Orc {
       if (original) out.write(b, i, clen)
       else {
         val chunk = kind match {
-          case 1 => inflateRaw(b, i, clen)
+          case 1 => Inflate.raw(b, i, clen, 1 << 26)
           case 2 => SnappyCodec.decompressRaw(
             java.util.Arrays.copyOfRange(b, i, i + clen), 1 << 26)
           case 5 => ZstdCodec.zstdDecompress(
@@ -176,23 +159,6 @@ object Orc {
     Fbs(i)
   }
 
-  private final class BitIn(b: Array[Byte], var pos: Int) {
-    private var bit = 0
-    def read(w: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < w) {
-        if (pos >= b.length) throw new MatchError("bits")
-        v = (v << 1) | ((b(pos) >>> (7 - bit)) & 1)
-        bit += 1
-        if (bit == 8) { bit = 0; pos += 1 }
-        k += 1
-      }
-      v
-    }
-    def align(): Int = { if (bit != 0) { bit = 0; pos += 1 }; pos }
-  }
-
   /** Decode exactly `n` RLEv2 values. */
   private def rlev2(b: Array[Byte], signed: Boolean,
       n: Int): Option[Array[Long]] =
@@ -221,10 +187,10 @@ object Orc {
             val w = Fbs((h >>> 1) & 0x1f)
             val len = (((h & 1) << 8) | (b(i + 1) & 0xff)) + 1
             if (k + len > n) return None
-            val bits = new BitIn(b, i + 2)
+            val bits = new MsbBitReader(b, i + 2)
             var c = 0
             while (c < len) {
-              val u = bits.read(w)
+              val u = bits.bits(w)
               out(k) = if (signed) zz(u) else u
               k += 1
               c += 1
@@ -236,10 +202,10 @@ object Orc {
             val len = (((h & 1) << 8) | (b(i + 1) & 0xff)) + 1
             if (k + len > n) return None
             var p = i + 2
-            val baseR = Protobuf.varint(b, p).getOrElse(return None)
+            val baseR = Bytes.varint(b, p).getOrElse(return None)
             val base = if (signed) zz(baseR._1) else baseR._1
             p = baseR._2
-            val dbR = Protobuf.varint(b, p).getOrElse(return None)
+            val dbR = Bytes.varint(b, p).getOrElse(return None)
             val deltaBase = zz(dbR._1)
             p = dbR._2
             out(k) = base; k += 1
@@ -251,12 +217,12 @@ object Orc {
               i = p
             } else {
               val w = Fbs(wCode)
-              val bits = new BitIn(b, p)
+              val bits = new MsbBitReader(b, p)
               var cur = base + deltaBase
               var c = 2
               val sign = if (deltaBase < 0) -1L else 1L
               while (c < len) {
-                val d = bits.read(w)
+                val d = bits.bits(w)
                 cur += sign * d
                 out(k) = cur
                 k += 1
@@ -282,15 +248,15 @@ object Orc {
             val signBit = 1L << (bw * 8 - 1)
             val base =
               if ((baseU & signBit) != 0) -(baseU & (signBit - 1)) else baseU
-            val bits = new BitIn(b, i + 4 + bw)
+            val bits = new MsbBitReader(b, i + 4 + bw)
             val data = new Array[Long](len)
             var c = 0
-            while (c < len) { data(c) = bits.read(w); c += 1 }
+            while (c < len) { data(c) = bits.bits(w); c += 1 }
             bits.align()
             val pew = closestFbs(pw + pgw)
             val patches = new Array[Long](pll)
             c = 0
-            while (c < pll) { patches(c) = bits.read(pew); c += 1 }
+            while (c < pll) { patches(c) = bits.bits(pew); c += 1 }
             i = bits.align()
             // gaps are cumulative from position 0; a (255, 0) entry
             // only extends the gap past the 8-bit field
@@ -311,7 +277,9 @@ object Orc {
         }
       }
       Some(out)
-    } catch { case _: MatchError => None }
+    } catch {
+      case _: MatchError | _: ArrayIndexOutOfBoundsException => None
+    }
 
   // ---- file walk --------------------------------------------------------
 

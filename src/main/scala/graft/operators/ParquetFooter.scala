@@ -4,6 +4,7 @@ import java.io.RandomAccessFile
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.Bytes
 import graft.engine.Tables
 
 /** Parquet footer walk — REAL Thrift compact-protocol parsing of
@@ -38,20 +39,12 @@ object ParquetFooter {
   // ------------------------------------------------------------------
 
   private[operators] final class Reader(val b: Array[Byte], var pos: Int) {
-    def u8(): Int = { val v = b(pos) & 0xff; pos += 1; v }
-    def varint(): Long = {
-      var v = 0L; var shift = 0
-      var more = true
-      while (more) {
-        val x = u8()
-        v |= (x & 0x7fL) << shift
-        shift += 7
-        if (shift > 70) throw new IllegalStateException("varint overrun")
-        more = (x & 0x80) != 0
-      }
-      v
+    def nextByte(): Int = { val v = b(pos) & 0xff; pos += 1; v }
+    def uleb(): Long = Bytes.varint(b, pos) match {
+      case Some((v, next)) => pos = next; v
+      case None => throw new IllegalStateException("varint")
     }
-    def zigzag(): Long = { val u = varint(); (u >>> 1) ^ -(u & 1) }
+    def zigzag(): Long = { val u = uleb(); (u >>> 1) ^ -(u & 1) }
     def bytes(n: Int): Array[Byte] = {
       if (n < 0 || pos + n > b.length) throw new IllegalStateException("eof")
       val out = java.util.Arrays.copyOfRange(b, pos, pos + n); pos += n
@@ -73,18 +66,18 @@ object ParquetFooter {
   /** Skip one value of compact type `t`. */
   private[operators] def skip(r: Reader, t: Int): Unit = t match {
     case TBoolTrue | TBoolFalse => ()
-    case TByte => r.u8(); ()
+    case TByte => r.nextByte(); ()
     case TI16 | TI32 | TI64 => r.zigzag(); ()
     case TDouble => r.bytes(8); ()
-    case TBinary => val n = r.varint().toInt; r.bytes(n); ()
+    case TBinary => val n = r.uleb().toInt; r.bytes(n); ()
     case TList | TSet =>
       val (et, n) = listHeader(r)
       var i = 0L
       while (i < n) { skip(r, et); i += 1 }
     case TMap =>
-      val n = r.varint()
+      val n = r.uleb()
       if (n > 0) {
-        val kv = r.u8()
+        val kv = r.nextByte()
         val kt = (kv >> 4) & 0xf; val vt = kv & 0xf
         var i = 0L
         while (i < n) { skip(r, kt); skip(r, vt); i += 1 }
@@ -93,7 +86,7 @@ object ParquetFooter {
       var last = 0
       var done = false
       while (!done) {
-        val h = r.u8()
+        val h = r.nextByte()
         if (h == TStop) done = true
         else {
           val delta = (h >> 4) & 0xf
@@ -106,10 +99,10 @@ object ParquetFooter {
   }
 
   private[operators] def listHeader(r: Reader): (Int, Long) = {
-    val h = r.u8()
+    val h = r.nextByte()
     val et = h & 0xf
     val n = (h >> 4) & 0xf
-    (et, if (n == 15) r.varint() else n.toLong)
+    (et, if (n == 15) r.uleb() else n.toLong)
   }
 
   /** Walk one struct, calling `field(id, type)` per field; the
@@ -118,7 +111,7 @@ object ParquetFooter {
     var last = 0
     var done = false
     while (!done) {
-      val h = r.u8()
+      val h = r.nextByte()
       if (h == TStop) done = true
       else {
         val delta = (h >> 4) & 0xf
@@ -166,7 +159,7 @@ object ParquetFooter {
               struct(r) { (fid, ft) =>
                 (fid, ft) match {
                   case (4, TBinary) =>
-                    name = new String(r.bytes(r.varint().toInt), "UTF-8")
+                    name = new String(r.bytes(r.uleb().toInt), "UTF-8")
                   case (5, TI32) => children = r.zigzag().toInt
                   case _ => if (ft != TBoolTrue && ft != TBoolFalse) skip(r, ft)
                 }
@@ -218,7 +211,7 @@ object ParquetFooter {
               i += 1
             }
           case (6, TBinary) =>
-            createdBy = new String(r.bytes(r.varint().toInt), "UTF-8")
+            createdBy = new String(r.bytes(r.uleb().toInt), "UTF-8")
           case _ => if (t != TBoolTrue && t != TBoolFalse) skip(r, t)
         }
       }
@@ -241,8 +234,7 @@ object ParquetFooter {
       raf.readFully(tail)
       if (!(tail(4) == 'P' && tail(5) == 'A' && tail(6) == 'R' &&
         tail(7) == '1')) return None
-      val fLen = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) |
-        ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
+      val fLen = Bytes.i32le(tail, 0)
       if (fLen <= 0 || fLen > len - 12) return None
       raf.seek(len - 8 - fLen)
       val footer = new Array[Byte](fLen)

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.Bytes
 import graft.engine.Tables
 import ParquetFooter.{struct => thriftStruct, _}
 
@@ -66,7 +67,7 @@ object ParquetPages {
                 (fid, ft) match {
                   case (3, TI32) => rep = r.zigzag().toInt
                   case (4, TBinary) =>
-                    name = new String(r.bytes(r.varint().toInt), "UTF-8")
+                    name = new String(r.bytes(r.uleb().toInt), "UTF-8")
                   case (5, TI32) => children = r.zigzag().toInt
                   case _ =>
                     if (ft != TBoolTrue && ft != TBoolFalse) skip(r, ft)
@@ -105,7 +106,7 @@ object ParquetPages {
                                   val parts = (0L until pn).map { _ =>
                                     if (pt != TBinary)
                                       throw new IllegalStateException("pp")
-                                    new String(r.bytes(r.varint().toInt),
+                                    new String(r.bytes(r.uleb().toInt),
                                       "UTF-8")
                                   }
                                   path = parts.mkString(".")
@@ -239,8 +240,7 @@ object ParquetPages {
     var end = end0
     if (lengthPrefixed) {
       if (off + 4 > end0) return None
-      val len = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-        ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
+      val len = Bytes.i32le(b, off)
       off += 4
       if (len < 0 || off + len > end0) return None
       end = off + len
@@ -427,9 +427,7 @@ object ParquetPages {
         val dataOff = off + ph.headerLen
         if (dataOff + ph.compSize > file.length) return None
         ph.crc.foreach { c =>
-          val crc = new java.util.zip.CRC32
-          crc.update(file, dataOff, ph.compSize)
-          if (crc.getValue.toInt != c) return None
+          if (Bytes.crc32(file, dataOff, ph.compSize).toInt != c) return None
         }
         // v2 pages carry RAW level bytes before the codec region, so
         // the whole-page decompress applies only to v1/dict pages
@@ -447,13 +445,7 @@ object ParquetPages {
               if (ph.numValues < 0 ||
                 ph.numValues.toLong * 8L > page.length) return None
               dictLongs = Array.tabulate(ph.numValues) { i =>
-                var v = 0L
-                var w = 0
-                while (w < 8) {
-                  v |= (page(i * 8 + w) & 0xffL) << (8 * w)
-                  w += 1
-                }
-                v
+                Bytes.u64le(page, i * 8)
               }
             } else {
               val ds = Array.newBuilder[String]
@@ -461,8 +453,7 @@ object ParquetPages {
               var cnt = 0
               while (cnt < ph.numValues) {
                 if (i + 4 > page.length) return None
-                val len = (page(i) & 0xff) | ((page(i + 1) & 0xff) << 8) |
-                  ((page(i + 2) & 0xff) << 16) | ((page(i + 3) & 0xff) << 24)
+                val len = Bytes.i32le(page, i)
                 i += 4
                 if (len < 0 || i + len > page.length) return None
                 ds += new String(page, i, len, "UTF-8")
@@ -492,12 +483,7 @@ object ParquetPages {
                     if (defs(emitted) == 0) out += None
                     else {
                       if (vi + 8 > page.length) return None
-                      var v = 0L
-                      var w = 0
-                      while (w < 8) {
-                        v |= (page(vi + w) & 0xffL) << (8 * w)
-                        w += 1
-                      }
+                      val v = Bytes.u64le(page, vi)
                       vi += 8
                       out += Some(Right(v))
                       k += 1
@@ -511,10 +497,7 @@ object ParquetPages {
                     if (defs(emitted) == 0) out += None
                     else {
                       if (vi + 4 > page.length) return None
-                      val len = (page(vi) & 0xff) |
-                        ((page(vi + 1) & 0xff) << 8) |
-                        ((page(vi + 2) & 0xff) << 16) |
-                        ((page(vi + 3) & 0xff) << 24)
+                      val len = Bytes.i32le(page, vi)
                       vi += 4
                       if (len < 0 || vi + len > page.length) return None
                       out += Some(Left(new String(page, vi, len, "UTF-8")))
@@ -668,7 +651,7 @@ object ParquetPages {
                 (fid, ft) match {
                   case (3, TI32) => rep = r.zigzag().toInt
                   case (4, TBinary) =>
-                    name = new String(r.bytes(r.varint().toInt), "UTF-8")
+                    name = new String(r.bytes(r.uleb().toInt), "UTF-8")
                   case (5, TI32) => children = r.zigzag()
                   case _ =>
                     if (ft != TBoolTrue && ft != TBoolFalse) skip(r, ft)
@@ -710,15 +693,12 @@ object ParquetPages {
         while (k < nPresent) {
           if (ptype == 2) {
             if (vi + 8 > page.length) return None
-            var v = 0L
-            var w = 0
-            while (w < 8) { v |= (page(vi + w) & 0xffL) << (8 * w); w += 1 }
+            val v = Bytes.u64le(page, vi)
             vi += 8
             out += Right(v)
           } else {
             if (vi + 4 > page.length) return None
-            val len = (page(vi) & 0xff) | ((page(vi + 1) & 0xff) << 8) |
-              ((page(vi + 2) & 0xff) << 16) | ((page(vi + 3) & 0xff) << 24)
+            val len = Bytes.i32le(page, vi)
             vi += 4
             if (len < 0 || vi + len > page.length) return None
             out += Left(new String(page, vi, len, "UTF-8"))
@@ -807,9 +787,7 @@ object ParquetPages {
         val dataOff = off + ph.headerLen
         if (dataOff + ph.compSize > file.length) return None
         ph.crc.foreach { c =>
-          val crc = new java.util.zip.CRC32
-          crc.update(file, dataOff, ph.compSize)
-          if (crc.getValue.toInt != c) return None
+          if (Bytes.crc32(file, dataOff, ph.compSize).toInt != c) return None
         }
         ph.ptype match {
           case 2 => // dictionary page
@@ -820,13 +798,7 @@ object ParquetPages {
               if (ph.numValues < 0 ||
                 ph.numValues.toLong * 8L > page.length) return None
               dictLongs = Array.tabulate(ph.numValues) { i =>
-                var v = 0L
-                var w = 0
-                while (w < 8) {
-                  v |= (page(i * 8 + w) & 0xffL) << (8 * w)
-                  w += 1
-                }
-                v
+                Bytes.u64le(page, i * 8)
               }
             } else {
               val ds = Array.newBuilder[String]
@@ -834,8 +806,7 @@ object ParquetPages {
               var cnt = 0
               while (cnt < ph.numValues) {
                 if (i + 4 > page.length) return None
-                val len = (page(i) & 0xff) | ((page(i + 1) & 0xff) << 8) |
-                  ((page(i + 2) & 0xff) << 16) | ((page(i + 3) & 0xff) << 24)
+                val len = Bytes.i32le(page, i)
                 i += 4
                 if (len < 0 || i + len > page.length) return None
                 ds += new String(page, i, len, "UTF-8")
@@ -951,8 +922,7 @@ object ParquetPages {
     val n = file.length
     if (file(n - 4) != 'P' || file(n - 3) != 'A' || file(n - 2) != 'R' ||
       file(n - 1) != '1') return None
-    val len = (file(n - 8) & 0xff) | ((file(n - 7) & 0xff) << 8) |
-      ((file(n - 6) & 0xff) << 16) | ((file(n - 5) & 0xff) << 24)
+    val len = Bytes.i32le(file, n - 8)
     if (len < 0 || len > n - 12) return None
     Some(java.util.Arrays.copyOfRange(file, n - 8 - len, n - 8))
   }

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.codec.{Bytes, Inflate}
+
 /** Pure-JVM PDF structure sniff: parse (and, for fixtures, emit) the
   * cross-reference skeleton of a classic-xref PDF (public spec, ISO
   * 32000-1) — no PDF libraries, no native deps.
@@ -39,6 +41,10 @@ import java.io.ByteArrayOutputStream
   * recursively (7.7.3.2).
   */
 object Pdf {
+
+  /** Inflated FlateDecode stream cap: a bomb fails instead of
+    * exhausting the heap. */
+  private val MaxStream = 1 << 26
 
   /** Sniffed PDF skeleton. `nObjects` = /Size − 1 (the spec counts the
     * always-free object 0); `nPages` = the page-tree root's /Count. */
@@ -216,14 +222,6 @@ object Pdf {
     Some(out)
   }
 
-  /** Big-endian unsigned field of `w` bytes (xref-stream records). */
-  private def beField(a: Array[Byte], off: Int, w: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < w) { v = (v << 8) | (a(off + i) & 0xff); i += 1 }
-    v
-  }
-
   /** One parsed classic cross-reference SECTION: the table's own
     * entries plus (hybrid files) those its /XRefStm stream reveals,
     * the trailer dict fields, and the /Prev chain link. */
@@ -355,7 +353,7 @@ object Pdf {
     val raw = java.util.Arrays.copyOfRange(b, dataFrom, dataFrom + len.toInt)
     val inflated =
       if (keyIdx(b, "/FlateDecode", dictFrom, kw) >= 0)
-        inflate(raw, 0, raw.length).getOrElse(return None)
+        Inflate.zlib(raw, MaxStream).getOrElse(return None)
       else raw
     val predictor = keyNum(b, "/Predictor", dictFrom, kw).getOrElse(1L).toInt
     val columns = keyNum(b, "/Columns", dictFrom, kw).getOrElse(1L).toInt
@@ -368,9 +366,9 @@ object Pdf {
       var k = 0L
       while (k < c) {
         val ro = base + (k * rowW).toInt
-        val t = if (w0 == 0) 1L else beField(data, ro, w0) // type dflt 1
-        val f2 = beField(data, ro + w0, w1)
-        val f3 = if (w2 == 0) 0L else beField(data, ro + w0 + w1, w2)
+        val t = if (w0 == 0) 1L else Bytes.uBe(data, ro, w0) // type dflt 1
+        val f2 = Bytes.uBe(data, ro + w0, w1)
+        val f3 = if (w2 == 0) 0L else Bytes.uBe(data, ro + w0 + w1, w2)
         t match {
           case 0 => // free
           case 1 => entries += ((s2 + k) -> InFile(f2))
@@ -515,7 +513,7 @@ object Pdf {
         dataFrom + len.toInt)
       val data =
         if (keyIdx(b, "/FlateDecode", from, kw) >= 0)
-          inflate(raw, 0, raw.length).getOrElse(return None)
+          Inflate.zlib(raw, MaxStream).getOrElse(return None)
         else raw
       if (first < 0 || first > data.length) return None
       val nums = new Array[Long](nObjs.toInt)
@@ -577,23 +575,6 @@ object Pdf {
   // ------------------------------------------------------------------
   // content-stream text extraction (round 14)
   // ------------------------------------------------------------------
-
-  /** Inflate a FlateDecode stream (JDK zlib). */
-  private def inflate(b: Array[Byte], from: Int, until: Int)
-      : Option[Array[Byte]] =
-    try {
-      val inf = new java.util.zip.Inflater()
-      inf.setInput(b, from, until - from)
-      val out = new ByteArrayOutputStream(math.max(64, (until - from) * 3))
-      val buf = new Array[Byte](4096)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && inf.needsInput()) return None // truncated
-        out.write(buf, 0, n)
-      }
-      inf.end()
-      Some(out.toByteArray)
-    } catch { case _: Exception => None }
 
   /** One text-run tokenizer pass over a decoded content stream.
     * Model (deliberately deterministic, the standard-14 assumption —
@@ -861,7 +842,7 @@ object Pdf {
             dataFrom + dataLen.toInt)
           val flate = indexOf(b, "/FlateDecode", sFrom, kw) >= 0
           val data =
-            if (flate) inflate(raw, 0, raw.length).getOrElse(return None)
+            if (flate) Inflate.zlib(raw, MaxStream).getOrElse(return None)
             else raw
           out ++= tokenizeText(data).getOrElse(return None)
         }

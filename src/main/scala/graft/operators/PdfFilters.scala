@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.Inflate
 import graft.engine.Tables
 
 /** The classic PDF stream filters beyond FlateDecode (ISO 32000-1
@@ -214,23 +215,7 @@ object PdfFilters {
           case "RunLengthDecode" => runLengthDecode(data)
           case "LZWDecode"       => Lzw.lzwDecode(data, earlyChange = earlyChange)
           case "FlateDecode" =>
-            try {
-              val inf = new java.util.zip.Inflater()
-              inf.setInput(data)
-              val out = new ByteArrayOutputStream(data.length * 2)
-              val buf = new Array[Byte](8192)
-              var stuck = false
-              while (!inf.finished() && !stuck) {
-                val k = inf.inflate(buf)
-                if (k == 0 && (inf.needsInput() || inf.needsDictionary()))
-                  stuck = true
-                else out.write(buf, 0, k)
-                if (out.size > (1 << 26)) stuck = true
-              }
-              val ok = inf.finished()
-              inf.end()
-              if (ok) Some(out.toByteArray) else None
-            } catch { case _: Exception => None }
+            Inflate.zlib(data, 1 << 26)
           case _ => None
         }
       }

@@ -5,6 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.codec.Bytes
 import graft.engine.Tables
 
 /** Compressed inverted-index postings — the storage layer under the
@@ -30,7 +31,7 @@ object Postings {
     ids.foreach { id =>
       val v = id - prev
       require(v >= 0, s"unsorted postings: $id after $prev")
-      Protobuf.putVarint(out, v)
+      Bytes.putVarint(out, v)
       prev = id
     }
     out.toByteArray
@@ -44,7 +45,7 @@ object Postings {
     var prev = base
     var i = 0
     while (i < b.length) {
-      val (gap, next) = Protobuf.varint(b, i).getOrElse(return None)
+      val (gap, next) = Bytes.varint(b, i).getOrElse(return None)
       i = next
       prev += gap
       out += prev

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.Bytes
 import graft.engine.Tables
 
 /** Protobuf wire-format field census — the binary sibling of the JSON
@@ -34,20 +35,20 @@ object Protobuf {
     val out = Vector.newBuilder[FieldOcc]
     var i = 0
     while (i < b.length) {
-      val tag = varint(b, i).getOrElse(return None)
+      val tag = Bytes.varint(b, i).getOrElse(return None)
       i = tag._2
       val fieldNo = (tag._1 >>> 3).toInt
       val wt = (tag._1 & 7).toInt
       if (fieldNo <= 0) return None
       wt match {
         case 0 =>
-          val v = varint(b, i).getOrElse(return None)
+          val v = Bytes.varint(b, i).getOrElse(return None)
           out += FieldOcc(fieldNo, 0, v._1); i = v._2
         case 1 =>
           if (i + 8 > b.length) return None
           out += FieldOcc(fieldNo, 1, 8L); i += 8
         case 2 =>
-          val len = varint(b, i).getOrElse(return None)
+          val len = Bytes.varint(b, i).getOrElse(return None)
           if (len._1 < 0 || len._1 > b.length - len._2) return None
           out += FieldOcc(fieldNo, 2, len._1)
           i = len._2 + len._1.toInt
@@ -60,46 +61,21 @@ object Protobuf {
     Some(out.result())
   }
 
-  /** Base-128 varint at `off`: (value, nextOffset). None past 10 bytes
-    * (the 64-bit maximum) or on truncation. */
-  private[operators] def varint(b: Array[Byte], off: Int): Option[(Long, Int)] = {
-    var v = 0L
-    var shift = 0
-    var i = off
-    while (i < b.length && shift <= 63) {
-      val x = b(i) & 0xff
-      v |= (x & 0x7fL) << shift
-      i += 1
-      if ((x & 0x80) == 0) return Some((v, i))
-      shift += 7
-    }
-    None
-  }
-
   // --------------------------------------------------- fixture emitter
 
-  /** Base-128 varint writer — the single write-side twin of [[varint]],
-    * shared by the zip/avro/postings encoders so encode and decode
-    * cannot drift apart per module. */
-  private[operators] def putVarint(out: ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
-
   private def putTag(out: ByteArrayOutputStream, fieldNo: Int, wt: Int): Unit =
-    putVarint(out, (fieldNo.toLong << 3) | wt)
+    Bytes.putVarint(out, (fieldNo.toLong << 3) | wt)
 
   /** Byte-valid message from (fieldNo, wireType, value-or-payload). */
   def encodeMessage(fields: Seq[(Int, Int, Either[Long, Array[Byte]])]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     fields.foreach {
-      case (no, 0, Left(v)) => putTag(out, no, 0); putVarint(out, v)
+      case (no, 0, Left(v)) => putTag(out, no, 0); Bytes.putVarint(out, v)
       case (no, 1, Left(v)) =>
         putTag(out, no, 1)
         var i = 0; while (i < 8) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
       case (no, 2, Right(p)) =>
-        putTag(out, no, 2); putVarint(out, p.length.toLong); out.write(p, 0, p.length)
+        putTag(out, no, 2); Bytes.putVarint(out, p.length.toLong); out.write(p, 0, p.length)
       case (no, 5, Left(v)) =>
         putTag(out, no, 5)
         var i = 0; while (i < 4) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.codec.Bytes
+
 /** Snappy, from the public format descriptions in google/snappy
   * (`format_description.txt` — the raw block format — and
   * `framing_format.txt` — the `sNaPpY` chunked stream with masked
@@ -31,33 +33,16 @@ object SnappyCodec {
   // raw block format
   // ------------------------------------------------------------------
 
-  /** LE base-128 varint at `at`; (value, indexAfter). Five bytes max
-    * (32-bit lengths per the spec). */
-  private def varint(b: Array[Byte], at: Int): Option[(Long, Int)] = {
-    var v = 0L
-    var i = at
-    var shift = 0
-    while (shift <= 28) {
-      if (i >= b.length) return None
-      val x = b(i) & 0xff
-      v |= (x & 0x7fL) << shift
-      i += 1
-      if ((x & 0x80) == 0) {
-        if (v > 0xffffffffL) return None
-        return Some((v, i))
-      }
-      shift += 7
-    }
-    None
-  }
-
   /** Decode one raw snappy block in `b[from, until)`. */
   def decompressRaw(b: Array[Byte], from: Int, until: Int,
       maxOut: Int): Option[Array[Byte]] = {
     try {
       if (b == null || from < 0 || until > b.length || from >= until)
         return None
-      val (total, dataAt) = varint(b, from).getOrElse(return None)
+      // five bytes max: 32-bit lengths per the spec
+      val (total, dataAt) = Bytes.varint(b, from)
+        .filter { case (v, at) => at - from <= 5 && v <= 0xffffffffL }
+        .getOrElse(return None)
       if (total > maxOut) return None
       val out = new Array[Byte](total.toInt)
       var pos = 0
@@ -94,13 +79,12 @@ object SnappyCodec {
             } else if (tp == 2) {
               if (i + 2 > until) return None
               len = (tag >> 2) + 1
-              offset = (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8)
+              offset = Bytes.u16le(b, i)
               i += 2
             } else {
               if (i + 4 > until) return None
               len = (tag >> 2) + 1
-              offset = (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-                ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
+              offset = Bytes.u32le(b, i)
               i += 4
             }
             if (offset <= 0 || offset > pos) return None // before start
@@ -178,11 +162,6 @@ object SnappyCodec {
     (((crc >>> 15) | (crc << 17)) + 0xa282ead8L) & 0xffffffffL
   }
 
-  private def u24le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (u24le(b, i).toLong & 0xffffffL) | ((b(i + 3) & 0xffL) << 24)
-
   /** Decode a framed snappy stream: the leading stream-identifier
     * chunk, compressed (0x00) and uncompressed (0x01) data chunks
     * with their masked CRC-32C verified, skippable padding (0xfe,
@@ -198,7 +177,7 @@ object SnappyCodec {
       while (i < b.length) {
         if (i + 4 > b.length) return None
         val tpe = b(i) & 0xff
-        val len = u24le(b, i + 1)
+        val len = Bytes.u24le(b, i + 1)
         i += 4
         if (i + len > b.length) return None
         if (first) {
@@ -220,7 +199,7 @@ object SnappyCodec {
             }
           case 0x00 => // compressed data chunk
             if (len < 4) return None
-            val want = u32le(b, i)
+            val want = Bytes.u32le(b, i)
             val block = decompressRaw(b, i + 4, i + len,
               math.min(65536, maxOut)).getOrElse(return None)
             if (maskedCrc(block, 0, block.length) != want) return None
@@ -228,7 +207,7 @@ object SnappyCodec {
             out.write(block, 0, block.length)
           case 0x01 => // uncompressed data chunk
             if (len < 4 || len - 4 > 65536) return None
-            val want = u32le(b, i)
+            val want = Bytes.u32le(b, i)
             if (maskedCrc(b, i + 4, len - 4) != want) return None
             if (out.size() + (len - 4) > maxOut) return None
             out.write(b, i + 4, len - 4)

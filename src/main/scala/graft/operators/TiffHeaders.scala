@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.codec.Bytes
+
 /** Pure-JVM TIFF / EXIF header codec: parse (and, for fixtures, emit)
   * the IFD structure of TIFF streams (public spec, TIFF 6.0 — Adobe) and
   * the EXIF APP1 segment of JPEG streams (public spec, CIPA DC-008,
@@ -65,22 +67,6 @@ object TiffHeaders {
       dateTimeOriginal: Option[String] = None,
       subSecOriginal: Option[String] = None)
 
-  // --- endianness-parameterized reads with explicit bounds ------------
-  private def u16(b: Array[Byte], i: Long, be: Boolean): Int = {
-    val o = i.toInt
-    if (be) ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-    else (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  }
-  private def u32(b: Array[Byte], i: Long, be: Boolean): Long = {
-    val o = i.toInt
-    if (be)
-      ((b(o) & 0xff).toLong << 24) | ((b(o + 1) & 0xff) << 16) |
-        ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
-    else
-      (b(o) & 0xff).toLong | ((b(o + 1) & 0xff).toLong << 8) |
-        ((b(o + 2) & 0xff).toLong << 16) | ((b(o + 3) & 0xff).toLong << 24)
-  }
-
   /** TIFF header sniff-and-parse to IFD0's dimension tags. Only IFD0 is
     * walked — ImageWidth(256)/ImageLength(257)/BitsPerSample(258) live
     * there per spec; thumbnail IFDs that follow are irrelevant to a
@@ -92,8 +78,8 @@ object TiffHeaders {
       if (b(0) == 'M' && b(1) == 'M') true
       else if (b(0) == 'I' && b(1) == 'I') false
       else return None
-    if (u16(b, 2, be) != 42) return None
-    val ifdOff = u32(b, 4, be)
+    if (Bytes.u16(b, 2, be) != 42) return None
+    val ifdOff = Bytes.u32(b, 4, be)
     parseIfd0(b, ifdOff, be).flatMap { tags =>
       for {
         w <- tags.get(256)
@@ -117,15 +103,15 @@ object TiffHeaders {
   private def parseIfd0(b: Array[Byte], ifdOff: Long,
       be: Boolean): Option[Map[Int, Long]] = {
     if (ifdOff < 8 || ifdOff + 2 > b.length) return None
-    val n = u16(b, ifdOff, be)
+    val n = Bytes.u16(b, ifdOff, be)
     if (ifdOff + 2 + 12L * n + 4 > b.length) return None
     var tags = Map.empty[Int, Long]
     var i = 0
     while (i < n) {
       val e = ifdOff + 2 + 12L * i
-      val tag = u16(b, e, be)
-      val typ = u16(b, e + 2, be)
-      val cnt = u32(b, e + 4, be)
+      val tag = Bytes.u16(b, e, be)
+      val typ = Bytes.u16(b, e + 2, be)
+      val cnt = Bytes.u32(b, e + 4, be)
       if (cnt >= 1) {
         // inline if the value bytes fit the 4-byte field (left-justified
         // in stream order, so the FIRST element is always at e+8)
@@ -134,12 +120,12 @@ object TiffHeaders {
         }
         if (elemSize > 0) {
           val inline = elemSize * cnt <= 4
-          val at = if (inline) e + 8 else u32(b, e + 8, be)
+          val at = if (inline) e + 8 else Bytes.u32(b, e + 8, be)
           if (at < 0 || at + elemSize > b.length) return None
           val v = typ match {
             case 1 => (b(at.toInt) & 0xff).toLong
-            case 3 => u16(b, at, be).toLong
-            case 4 => u32(b, at, be)
+            case 3 => Bytes.u16(b, at, be).toLong
+            case 4 => Bytes.u32(b, at, be)
           }
           tags += tag -> v
         }
@@ -154,15 +140,15 @@ object TiffHeaders {
   private def asciiTag(b: Array[Byte], ifdOff: Long, be: Boolean,
       wantTag: Int): Option[String] = {
     if (ifdOff < 8 || ifdOff + 2 > b.length) return None
-    val n = u16(b, ifdOff, be)
+    val n = Bytes.u16(b, ifdOff, be)
     if (ifdOff + 2 + 12L * n + 4 > b.length) return None
     var i = 0
     while (i < n) {
       val e = ifdOff + 2 + 12L * i
-      if (u16(b, e, be) == wantTag && u16(b, e + 2, be) == 2) {
-        val cnt = u32(b, e + 4, be)
+      if (Bytes.u16(b, e, be) == wantTag && Bytes.u16(b, e + 2, be) == 2) {
+        val cnt = Bytes.u32(b, e + 4, be)
         if (cnt < 1) return None
-        val at = if (cnt <= 4) e + 8 else u32(b, e + 8, be)
+        val at = if (cnt <= 4) e + 8 else Bytes.u32(b, e + 8, be)
         if (at < 0 || at + cnt > b.length) return None
         // count includes the NUL; tolerate a missing one
         val end = if (b((at + cnt - 1).toInt) == 0) cnt - 1 else cnt
@@ -190,8 +176,8 @@ object TiffHeaders {
       if (tiff(0) == 'M' && tiff(1) == 'M') true
       else if (tiff(0) == 'I' && tiff(1) == 'I') false
       else return None
-    if (u16(tiff, 2, be) != 42) return None
-    val ifdOff = u32(tiff, 4, be)
+    if (Bytes.u16(tiff, 2, be) != 42) return None
+    val ifdOff = Bytes.u32(tiff, 4, be)
     val tags = parseIfd0(tiff, ifdOff, be).getOrElse(return None)
     val orient = tags.getOrElse(274, 1L) // EXIF default: upright
     if (orient < 1 || orient > 8) return None
@@ -209,29 +195,21 @@ object TiffHeaders {
     val makeBytes = make.getBytes("US-ASCII")
     val makeCnt = makeBytes.length + 1
     val out = new ByteArrayOutputStream(48 + makeCnt)
-    def t16(v: Int): Unit =
-      if (bigEndian) { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-      else { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def t32(v: Long): Unit =
-      if (bigEndian) {
-        out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-        out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-      } else {
-        out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-        out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-      }
     if (bigEndian) { out.write('M'); out.write('M') }
     else { out.write('I'); out.write('I') }
-    t16(42); t32(8L)
-    t16(2)
-    t16(271); t16(2); t32(makeCnt.toLong)
+    Bytes.write16(out, 42, bigEndian); Bytes.write32(out, 8L, bigEndian)
+    Bytes.write16(out, 2, bigEndian)
+    Bytes.write16(out, 271, bigEndian); Bytes.write16(out, 2, bigEndian)
+    Bytes.write32(out, makeCnt.toLong, bigEndian)
     if (makeCnt <= 4) {
       out.write(makeBytes, 0, makeBytes.length); out.write(0)
       var pad = 4 - makeCnt
       while (pad > 0) { out.write(0); pad -= 1 }
-    } else t32(8L + 30L)
-    t16(274); t16(3); t32(1L); t16(orientation); t16(0)
-    t32(0L)
+    } else Bytes.write32(out, 8L + 30L, bigEndian)
+    Bytes.write16(out, 274, bigEndian); Bytes.write16(out, 3, bigEndian)
+    Bytes.write32(out, 1L, bigEndian); Bytes.write16(out, orientation, bigEndian)
+    Bytes.write16(out, 0, bigEndian)
+    Bytes.write32(out, 0L, bigEndian)
     if (makeCnt > 4) { out.write(makeBytes, 0, makeBytes.length); out.write(0) }
     out.toByteArray
   }
@@ -255,7 +233,7 @@ object TiffHeaders {
         off = mOff + 1
       } else {
         if (mOff + 3 > b.length) return None
-        val len = ((b(mOff + 1) & 0xff) << 8) | (b(mOff + 2) & 0xff)
+        val len = Bytes.u16be(b, mOff + 1)
         if (len < 2 || mOff + 1 + len > b.length) return None
         if (marker == 0xe1 && len >= 2 + 6 + 8 &&
           b(mOff + 3) == 'E' && b(mOff + 4) == 'x' && b(mOff + 5) == 'i' &&
@@ -281,17 +259,17 @@ object TiffHeaders {
   private def ifdEntries(b: Array[Byte], ifdOff: Long,
       be: Boolean): Option[(Array[IfdEntry], Long)] = {
     if (ifdOff < 8 || ifdOff + 2 > b.length) return None
-    val n = u16(b, ifdOff, be)
+    val n = Bytes.u16(b, ifdOff, be)
     if (ifdOff + 2 + 12L * n + 4 > b.length) return None
     val out = new Array[IfdEntry](n)
     var i = 0
     while (i < n) {
       val e = ifdOff + 2 + 12L * i
-      out(i) = IfdEntry(u16(b, e, be), u16(b, e + 2, be),
-        u32(b, e + 4, be), e + 8)
+      out(i) = IfdEntry(Bytes.u16(b, e, be), Bytes.u16(b, e + 2, be),
+        Bytes.u32(b, e + 4, be), e + 8)
       i += 1
     }
-    Some((out, u32(b, ifdOff + 2 + 12L * n, be)))
+    Some((out, Bytes.u32(b, ifdOff + 2 + 12L * n, be)))
   }
 
   /** First scalar of a SHORT(3)/LONG(4) entry (inline rule honored). */
@@ -300,16 +278,16 @@ object TiffHeaders {
     if (e.cnt < 1) return None
     val elemSize = e.typ match { case 3 => 2L; case 4 => 4L; case _ => 0L }
     if (elemSize == 0) return None
-    val at = if (elemSize * e.cnt <= 4) e.fieldOff else u32(b, e.fieldOff, be)
+    val at = if (elemSize * e.cnt <= 4) e.fieldOff else Bytes.u32(b, e.fieldOff, be)
     if (at < 0 || at + elemSize > b.length) return None
-    Some(if (e.typ == 3) u16(b, at, be).toLong else u32(b, at, be))
+    Some(if (e.typ == 3) Bytes.u16(b, at, be).toLong else Bytes.u32(b, at, be))
   }
 
   /** ASCII entry (type 2, count includes the NUL; inline if ≤ 4). */
   private def asciiOf(b: Array[Byte], e: IfdEntry,
       be: Boolean): Option[String] = {
     if (e.typ != 2 || e.cnt < 1) return None
-    val at = if (e.cnt <= 4) e.fieldOff else u32(b, e.fieldOff, be)
+    val at = if (e.cnt <= 4) e.fieldOff else Bytes.u32(b, e.fieldOff, be)
     if (at < 0 || at + e.cnt > b.length) return None
     val end = if (b((at + e.cnt - 1).toInt) == 0) e.cnt - 1 else e.cnt
     Some(new String(b, at.toInt, end.toInt, "US-ASCII"))
@@ -321,13 +299,13 @@ object TiffHeaders {
   private def rational3Of(b: Array[Byte], e: IfdEntry,
       be: Boolean): Option[Array[Long]] = {
     if (e.typ != 5 || e.cnt != 3) return None
-    val at = u32(b, e.fieldOff, be)
+    val at = Bytes.u32(b, e.fieldOff, be)
     if (at < 0 || at + 24 > b.length) return None
     val v = new Array[Long](6)
     var i = 0
     while (i < 3) {
-      v(2 * i) = u32(b, at + 8L * i, be)
-      v(2 * i + 1) = u32(b, at + 8L * i + 4, be)
+      v(2 * i) = Bytes.u32(b, at + 8L * i, be)
+      v(2 * i + 1) = Bytes.u32(b, at + 8L * i + 4, be)
       if (v(2 * i + 1) == 0) return None
       i += 1
     }
@@ -364,8 +342,8 @@ object TiffHeaders {
       if (tiff(0) == 'M' && tiff(1) == 'M') true
       else if (tiff(0) == 'I' && tiff(1) == 'I') false
       else return None
-    if (u16(tiff, 2, be) != 42) return None
-    val ifdOff = u32(tiff, 4, be)
+    if (Bytes.u16(tiff, 2, be) != 42) return None
+    val ifdOff = Bytes.u32(tiff, 4, be)
     val (entries, nextIfd) = ifdEntries(tiff, ifdOff, be).getOrElse(return None)
     val orient = entries.find(_.tag == 274)
       .flatMap(scalarOf(tiff, _, be)).getOrElse(1L)
@@ -417,39 +395,32 @@ object TiffHeaders {
     require(bitsPerSample >= 1 && bitsPerSample <= 0xffff,
       "BitsPerSample is SHORT")
     val out = new ByteArrayOutputStream(note.length + 72)
-    def w16(v: Int): Unit =
-      if (bigEndian) { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-      else { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Long): Unit =
-      if (bigEndian) {
-        out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-        out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-      } else {
-        out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-        out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-      }
     // header
     if (bigEndian) { out.write('M'); out.write('M') }
     else { out.write('I'); out.write('I') }
-    w16(42)
+    Bytes.write16(out, 42, bigEndian)
     val ifdOff = 8L + note.length
-    w32(ifdOff)
+    Bytes.write32(out, ifdOff, bigEndian)
     out.write(note, 0, note.length)
     // IFD0: 4 entries, ascending tags
     val ifdBytes = 2 + 4 * 12 + 4
-    w16(4)
+    Bytes.write16(out, 4, bigEndian)
     def entry(tag: Int, typ: Int, cnt: Long)(value: => Unit): Unit = {
-      w16(tag); w16(typ); w32(cnt); value
+      Bytes.write16(out, tag, bigEndian); Bytes.write16(out, typ, bigEndian)
+      Bytes.write32(out, cnt, bigEndian); value
     }
-    entry(256, 4, 1)(w32(width.toLong)) // ImageWidth LONG
-    entry(257, 4, 1)(w32(height.toLong)) // ImageLength LONG
+    entry(256, 4, 1)(Bytes.write32(out, width.toLong, bigEndian)) // ImageWidth LONG
+    entry(257, 4, 1)(Bytes.write32(out, height.toLong, bigEndian)) // ImageLength LONG
     if (samples == 1)
-      entry(258, 3, 1) { w16(bitsPerSample); w16(0) } // inline SHORT
+      entry(258, 3, 1) { Bytes.write16(out, bitsPerSample, bigEndian)
+      Bytes.write16(out, 0, bigEndian) } // inline SHORT
     else
-      entry(258, 3, 3)(w32(ifdOff + ifdBytes)) // offset past the IFD
-    entry(277, 3, 1) { w16(samples); w16(0) } // SamplesPerPixel
-    w32(0) // next IFD: none
-    if (samples == 3) { w16(bitsPerSample); w16(bitsPerSample); w16(bitsPerSample) }
+      entry(258, 3, 3)(Bytes.write32(out, ifdOff + ifdBytes, bigEndian)) // offset past the IFD
+    entry(277, 3, 1) { Bytes.write16(out, samples, bigEndian)
+    Bytes.write16(out, 0, bigEndian) } // SamplesPerPixel
+    Bytes.write32(out, 0, bigEndian) // next IFD: none
+    if (samples == 3) { Bytes.write16(out, bitsPerSample, bigEndian)
+    Bytes.write16(out, bitsPerSample, bigEndian); Bytes.write16(out, bitsPerSample, bigEndian) }
     out.toByteArray
   }
 
@@ -472,50 +443,42 @@ object TiffHeaders {
     val makeBytes = make.getBytes("US-ASCII")
     val out = new ByteArrayOutputStream(comment.length + makeBytes.length + 96)
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
     marker(0xd8) // SOI
     // APP1: Exif\0\0 + TIFF(hdr 8 + IFD 2+2*12+4 + make+NUL when the
     // ASCII value doesn't fit the entry's 4-byte field inline)
     val tiffLen = 8 + 30 +
       (if (makeBytes.length + 1 <= 4) 0 else makeBytes.length + 1)
     marker(0xe1)
-    be16(2 + 6 + tiffLen)
+    Bytes.be16(out, 2 + 6 + tiffLen)
     out.write("Exif".getBytes("US-ASCII"), 0, 4); out.write(0); out.write(0)
-    def t16(v: Int): Unit =
-      if (bigEndian) be16(v)
-      else { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def t32(v: Long): Unit =
-      if (bigEndian) {
-        out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-        out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-      } else {
-        out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-        out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-      }
     if (bigEndian) { out.write('M'); out.write('M') }
     else { out.write('I'); out.write('I') }
-    t16(42); t32(8L) // IFD0 immediately after the header
-    t16(2) // two entries, ascending tags: 271 then 274
+    Bytes.write16(out, 42, bigEndian)
+    Bytes.write32(out, 8L, bigEndian) // IFD0 immediately after the header
+    Bytes.write16(out, 2, bigEndian) // two entries, ascending tags: 271 then 274
     val makeCnt = makeBytes.length + 1 // ASCII count includes the NUL
-    t16(271); t16(2); t32(makeCnt.toLong)
+    Bytes.write16(out, 271, bigEndian); Bytes.write16(out, 2, bigEndian)
+    Bytes.write32(out, makeCnt.toLong, bigEndian)
     if (makeCnt <= 4) {
       // spec inline rule: value bytes fill the field left-justified
       out.write(makeBytes, 0, makeBytes.length); out.write(0)
       var pad = 4 - makeCnt
       while (pad > 0) { out.write(0); pad -= 1 }
-    } else t32(8L + 30L) // offset past the IFD
-    t16(274); t16(3); t32(1L); t16(orientation); t16(0)
-    t32(0L) // next IFD: none
+    } else Bytes.write32(out, 8L + 30L, bigEndian) // offset past the IFD
+    Bytes.write16(out, 274, bigEndian); Bytes.write16(out, 3, bigEndian)
+    Bytes.write32(out, 1L, bigEndian); Bytes.write16(out, orientation, bigEndian)
+    Bytes.write16(out, 0, bigEndian)
+    Bytes.write32(out, 0L, bigEndian) // next IFD: none
     if (makeCnt > 4) { out.write(makeBytes, 0, makeBytes.length); out.write(0) }
     // COM the walk must hop
     marker(0xfe)
-    be16(comment.length + 2)
+    Bytes.be16(out, comment.length + 2)
     out.write(comment, 0, comment.length)
     // SOF0 (3 components) — same shape as ImageHeaders.encodeJpeg
     marker(0xc0)
-    be16(8 + 3 * 3)
+    Bytes.be16(out, 8 + 3 * 3)
     out.write(8)
-    be16(height); be16(width)
+    Bytes.be16(out, height); Bytes.be16(out, width)
     out.write(3)
     var c = 1
     while (c <= 3) { out.write(c); out.write(0x11); out.write(0); c += 1 }
@@ -546,18 +509,6 @@ object TiffHeaders {
     require(makeCnt > 4, "make must be offset-valued (>= 4 chars)")
     val out = new ByteArrayOutputStream(makeCnt + 160)
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def t16(v: Int): Unit =
-      if (bigEndian) be16(v)
-      else { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def t32(v: Long): Unit =
-      if (bigEndian) {
-        out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-        out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-      } else {
-        out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-        out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-      }
     marker(0xd8)
     val ifd0Off = 8L
     val makeOff = ifd0Off + 42
@@ -565,31 +516,37 @@ object TiffHeaders {
     val dtoOff = exifOff + 30
     val tiffLen = dtoOff + 20
     marker(0xe1)
-    be16((2 + 6 + tiffLen).toInt)
+    Bytes.be16(out, (2 + 6 + tiffLen).toInt)
     out.write("Exif".getBytes("US-ASCII"), 0, 4); out.write(0); out.write(0)
     if (bigEndian) { out.write('M'); out.write('M') }
     else { out.write('I'); out.write('I') }
-    t16(42); t32(ifd0Off)
-    t16(3)
-    t16(271); t16(2); t32(makeCnt.toLong); t32(makeOff)
-    t16(274); t16(3); t32(1L); t16(orientation); t16(0)
-    t16(0x8769); t16(4); t32(1L); t32(exifOff)
-    t32(0L)
+    Bytes.write16(out, 42, bigEndian); Bytes.write32(out, ifd0Off, bigEndian)
+    Bytes.write16(out, 3, bigEndian)
+    Bytes.write16(out, 271, bigEndian); Bytes.write16(out, 2, bigEndian)
+    Bytes.write32(out, makeCnt.toLong, bigEndian); Bytes.write32(out, makeOff, bigEndian)
+    Bytes.write16(out, 274, bigEndian); Bytes.write16(out, 3, bigEndian)
+    Bytes.write32(out, 1L, bigEndian); Bytes.write16(out, orientation, bigEndian)
+    Bytes.write16(out, 0, bigEndian)
+    Bytes.write16(out, 0x8769, bigEndian); Bytes.write16(out, 4, bigEndian)
+    Bytes.write32(out, 1L, bigEndian); Bytes.write32(out, exifOff, bigEndian)
+    Bytes.write32(out, 0L, bigEndian)
     out.write(makeBytes, 0, makeBytes.length); out.write(0)
     // Exif sub-IFD
-    t16(2)
-    t16(0x9003); t16(2); t32(20L); t32(dtoOff)
-    t16(0x9291); t16(2); t32(subSec.length + 1L)
+    Bytes.write16(out, 2, bigEndian)
+    Bytes.write16(out, 0x9003, bigEndian); Bytes.write16(out, 2, bigEndian)
+    Bytes.write32(out, 20L, bigEndian); Bytes.write32(out, dtoOff, bigEndian)
+    Bytes.write16(out, 0x9291, bigEndian); Bytes.write16(out, 2, bigEndian)
+    Bytes.write32(out, subSec.length + 1L, bigEndian)
     out.write(subSec.getBytes("US-ASCII"), 0, subSec.length); out.write(0)
     var pad = 4 - (subSec.length + 1)
     while (pad > 0) { out.write(0); pad -= 1 }
-    t32(0L)
+    Bytes.write32(out, 0L, bigEndian)
     out.write(dateTime.getBytes("US-ASCII"), 0, 19); out.write(0)
     // SOF0 (3 components) + EOI — the family shape
     marker(0xc0)
-    be16(8 + 3 * 3)
+    Bytes.be16(out, 8 + 3 * 3)
     out.write(8)
-    be16(height); be16(width)
+    Bytes.be16(out, height); Bytes.be16(out, width)
     out.write(3)
     var c = 1
     while (c <= 3) { out.write(c); out.write(0x11); out.write(0); c += 1 }
@@ -628,18 +585,6 @@ object TiffHeaders {
     require(makeCnt > 4, "make must be offset-valued (>= 4 chars)")
     val out = new ByteArrayOutputStream(thumb.length + makeCnt + 256)
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def t16(v: Int): Unit =
-      if (bigEndian) be16(v)
-      else { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def t32(v: Long): Unit =
-      if (bigEndian) {
-        out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-        out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-      } else {
-        out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-        out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-      }
     marker(0xd8) // SOI
     // TIFF-relative offsets, computed up front
     val ifd0Off = 8L
@@ -653,42 +598,53 @@ object TiffHeaders {
     require(2 + 6 + tiffLen <= 0xffff,
       s"APP1 segment overflows u16 length: thumbnail too large (${thumb.length} B)")
     marker(0xe1)
-    be16((2 + 6 + tiffLen).toInt)
+    Bytes.be16(out, (2 + 6 + tiffLen).toInt)
     out.write("Exif".getBytes("US-ASCII"), 0, 4); out.write(0); out.write(0)
     if (bigEndian) { out.write('M'); out.write('M') }
     else { out.write('I'); out.write('I') }
-    t16(42); t32(ifd0Off)
+    Bytes.write16(out, 42, bigEndian); Bytes.write32(out, ifd0Off, bigEndian)
     // IFD0: Make, Orientation, GPSInfo pointer; next-IFD -> IFD1
-    t16(3)
-    t16(271); t16(2); t32(makeCnt.toLong); t32(makeOff)
-    t16(274); t16(3); t32(1L); t16(orientation); t16(0)
-    t16(0x8825); t16(4); t32(1L); t32(gpsOff)
-    t32(ifd1Off)
+    Bytes.write16(out, 3, bigEndian)
+    Bytes.write16(out, 271, bigEndian); Bytes.write16(out, 2, bigEndian)
+    Bytes.write32(out, makeCnt.toLong, bigEndian); Bytes.write32(out, makeOff, bigEndian)
+    Bytes.write16(out, 274, bigEndian); Bytes.write16(out, 3, bigEndian)
+    Bytes.write32(out, 1L, bigEndian); Bytes.write16(out, orientation, bigEndian)
+    Bytes.write16(out, 0, bigEndian)
+    Bytes.write16(out, 0x8825, bigEndian); Bytes.write16(out, 4, bigEndian)
+    Bytes.write32(out, 1L, bigEndian); Bytes.write32(out, gpsOff, bigEndian)
+    Bytes.write32(out, ifd1Off, bigEndian)
     out.write(makeBytes, 0, makeBytes.length); out.write(0)
     // GPS IFD: refs inline ("N\0" count 2, field zero-padded), coords
     // offset-valued RATIONAL x3
-    t16(4)
-    t16(1); t16(2); t32(2L); out.write(latRef); out.write(0)
-    t16(0); // pad the 4-byte value field
-    t16(2); t16(5); t32(3L); t32(latOff)
-    t16(3); t16(2); t32(2L); out.write(lonRef); out.write(0)
-    t16(0)
-    t16(4); t16(5); t32(3L); t32(lonOff)
-    t32(0L)
-    def rat(num: Long, den: Long): Unit = { t32(num); t32(den) }
+    Bytes.write16(out, 4, bigEndian)
+    Bytes.write16(out, 1, bigEndian); Bytes.write16(out, 2, bigEndian)
+    Bytes.write32(out, 2L, bigEndian); out.write(latRef); out.write(0)
+    Bytes.write16(out, 0, bigEndian); // pad the 4-byte value field
+    Bytes.write16(out, 2, bigEndian); Bytes.write16(out, 5, bigEndian)
+    Bytes.write32(out, 3L, bigEndian); Bytes.write32(out, latOff, bigEndian)
+    Bytes.write16(out, 3, bigEndian); Bytes.write16(out, 2, bigEndian)
+    Bytes.write32(out, 2L, bigEndian); out.write(lonRef); out.write(0)
+    Bytes.write16(out, 0, bigEndian)
+    Bytes.write16(out, 4, bigEndian); Bytes.write16(out, 5, bigEndian)
+    Bytes.write32(out, 3L, bigEndian); Bytes.write32(out, lonOff, bigEndian)
+    Bytes.write32(out, 0L, bigEndian)
+    def rat(num: Long, den: Long): Unit = { Bytes.write32(out, num, bigEndian)
+    Bytes.write32(out, den, bigEndian) }
     rat(latDeg, 1); rat(latMin, 1); rat(latSecNum, latSecDen)
     rat(lonDeg, 1); rat(lonMin, 1); rat(lonSecNum, lonSecDen)
     // IFD1: thumbnail offset + length
-    t16(2)
-    t16(513); t16(4); t32(1L); t32(thumbOff)
-    t16(514); t16(4); t32(1L); t32(thumb.length.toLong)
-    t32(0L)
+    Bytes.write16(out, 2, bigEndian)
+    Bytes.write16(out, 513, bigEndian); Bytes.write16(out, 4, bigEndian)
+    Bytes.write32(out, 1L, bigEndian); Bytes.write32(out, thumbOff, bigEndian)
+    Bytes.write16(out, 514, bigEndian); Bytes.write16(out, 4, bigEndian)
+    Bytes.write32(out, 1L, bigEndian); Bytes.write32(out, thumb.length.toLong, bigEndian)
+    Bytes.write32(out, 0L, bigEndian)
     out.write(thumb, 0, thumb.length)
     // SOF0 (3 components) + EOI — same shape as encodeJpegExif
     marker(0xc0)
-    be16(8 + 3 * 3)
+    Bytes.be16(out, 8 + 3 * 3)
     out.write(8)
-    be16(height); be16(width)
+    Bytes.be16(out, height); Bytes.be16(out, width)
     out.write(3)
     var c = 1
     while (c <= 3) { out.write(c); out.write(0x11); out.write(0); c += 1 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.codec.Bytes
+
 /** Pure-JVM video header codec: parse (and, for fixtures, emit) the
   * metadata-bearing prefix of MP4 / ISO-BMFF streams (public spec,
   * ISO/IEC 14496-12) — the VIDEO sibling of [[ImageHeaders]] /
@@ -33,13 +35,6 @@ object VideoHeaders {
   final case class Mp4Meta(brand: String, timescale: Int,
       durationUnits: Long, width: Int, height: Int, nTracks: Int)
 
-  private def u32(b: Array[Byte], i: Long): Long = {
-    val o = i.toInt
-    ((b(o) & 0xff).toLong << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
-  }
-  private def u64(b: Array[Byte], i: Long): Long =
-    (u32(b, i) << 32) | u32(b, i + 4)
   private def fourcc(b: Array[Byte], i: Long): String =
     new String(b, i.toInt, 4, "US-ASCII")
 
@@ -48,13 +43,13 @@ object VideoHeaders {
   private def boxAt(b: Array[Byte], off: Long,
       limit: Long): Option[(Long, Long, String)] = {
     if (off + 8 > limit) return None
-    val size32 = u32(b, off)
+    val size32 = Bytes.u32be(b, off)
     val typ = fourcc(b, off + 4)
     val (payload, end) =
       if (size32 == 0) (off + 8, limit) // box extends to the end
       else if (size32 == 1) {
         if (off + 16 > limit) return None
-        val large = u64(b, off + 8)
+        val large = Bytes.u64be(b, off + 8)
         if (large < 16) return None
         (off + 16, off + large)
       } else {
@@ -99,12 +94,12 @@ object VideoHeaders {
       val version = b(p.toInt) & 0xff
       if (version == 0) {
         if (end - p < 20) return false
-        timescale = u32(b, p + 12).toInt
-        duration = u32(b, p + 16)
+        timescale = Bytes.u32be(b, p + 12).toInt
+        duration = Bytes.u32be(b, p + 16)
       } else {
         if (end - p < 32) return false
-        timescale = u32(b, p + 20).toInt
-        duration = u64(b, p + 24)
+        timescale = Bytes.u32be(b, p + 20).toInt
+        duration = Bytes.u64be(b, p + 24)
       }
       timescale > 0
     }
@@ -116,8 +111,8 @@ object VideoHeaders {
       nTracks += 1
       if (width == 0 && height == 0) {
         // 16.16 fixed point; audio tracks are 0x0 — keep looking
-        width = (u32(b, p + dimsOff) >> 16).toInt
-        height = (u32(b, p + dimsOff + 4) >> 16).toInt
+        width = (Bytes.u32be(b, p + dimsOff) >> 16).toInt
+        height = (Bytes.u32be(b, p + dimsOff + 4) >> 16).toInt
       }
       true
     }
@@ -162,48 +157,44 @@ object VideoHeaders {
       height <= 0xffff, "tkhd dims are 16.16 fixed")
     require(nTracks >= 1, "need at least one track")
     val out = new ByteArrayOutputStream(note.length + 160)
-    def be32(v: Long): Unit = {
-      out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-    }
     def cc(s: String): Unit = out.write(s.getBytes("US-ASCII"), 0, 4)
     // ftyp
-    be32(24); cc("ftyp"); cc(brand); be32(0); cc("isom"); cc("mp42")
+    Bytes.be32(out, 24); cc("ftyp"); cc(brand); Bytes.be32(out, 0); cc("isom"); cc("mp42")
     // free box the walk must hop
-    be32(8L + note.length); cc("free"); out.write(note, 0, note.length)
+    Bytes.be32(out, 8L + note.length); cc("free"); out.write(note, 0, note.length)
     // moov
     val tkhdBox = 8 + 84
     val trakBox = 8 + tkhdBox
     val mvhdBox = 8 + 100
-    be32(8L + mvhdBox + nTracks.toLong * trakBox); cc("moov")
-    be32(mvhdBox); cc("mvhd")
-    be32(0) // version 0 + flags
-    be32(0); be32(0) // ctime, mtime
-    be32(timescale); be32(durationUnits)
-    be32(0x00010000L); out.write(0x01); out.write(0x00) // rate 1.0, vol 1.0
+    Bytes.be32(out, 8L + mvhdBox + nTracks.toLong * trakBox); cc("moov")
+    Bytes.be32(out, mvhdBox); cc("mvhd")
+    Bytes.be32(out, 0) // version 0 + flags
+    Bytes.be32(out, 0); Bytes.be32(out, 0) // ctime, mtime
+    Bytes.be32(out, timescale); Bytes.be32(out, durationUnits)
+    Bytes.be32(out, 0x00010000L); out.write(0x01); out.write(0x00) // rate 1.0, vol 1.0
     out.write(new Array[Byte](2 + 8), 0, 10) // reserved
     // identity matrix
-    be32(0x00010000L); be32(0); be32(0)
-    be32(0); be32(0x00010000L); be32(0)
-    be32(0); be32(0); be32(0x40000000L)
+    Bytes.be32(out, 0x00010000L); Bytes.be32(out, 0); Bytes.be32(out, 0)
+    Bytes.be32(out, 0); Bytes.be32(out, 0x00010000L); Bytes.be32(out, 0)
+    Bytes.be32(out, 0); Bytes.be32(out, 0); Bytes.be32(out, 0x40000000L)
     out.write(new Array[Byte](24), 0, 24) // pre_defined
-    be32(nTracks + 1L) // next_track_ID
+    Bytes.be32(out, nTracks + 1L) // next_track_ID
     var t = 0
     while (t < nTracks) {
-      be32(trakBox); cc("trak")
-      be32(tkhdBox); cc("tkhd")
-      be32(0) // version 0 + flags
-      be32(0); be32(0) // ctime, mtime
-      be32(t + 1L) // track_ID
-      be32(0) // reserved
-      be32(durationUnits)
+      Bytes.be32(out, trakBox); cc("trak")
+      Bytes.be32(out, tkhdBox); cc("tkhd")
+      Bytes.be32(out, 0) // version 0 + flags
+      Bytes.be32(out, 0); Bytes.be32(out, 0) // ctime, mtime
+      Bytes.be32(out, t + 1L) // track_ID
+      Bytes.be32(out, 0) // reserved
+      Bytes.be32(out, durationUnits)
       out.write(new Array[Byte](8), 0, 8) // reserved
       out.write(new Array[Byte](8), 0, 8) // layer/alt/volume/reserved
-      be32(0x00010000L); be32(0); be32(0)
-      be32(0); be32(0x00010000L); be32(0)
-      be32(0); be32(0); be32(0x40000000L)
+      Bytes.be32(out, 0x00010000L); Bytes.be32(out, 0); Bytes.be32(out, 0)
+      Bytes.be32(out, 0); Bytes.be32(out, 0x00010000L); Bytes.be32(out, 0)
+      Bytes.be32(out, 0); Bytes.be32(out, 0); Bytes.be32(out, 0x40000000L)
       val (w, h) = if (t == 0) (width, height) else (0, 0)
-      be32(w.toLong << 16); be32(h.toLong << 16)
+      Bytes.be32(out, w.toLong << 16); Bytes.be32(out, h.toLong << 16)
       t += 1
     }
     out.toByteArray
@@ -239,7 +230,7 @@ object VideoHeaders {
     var found: Option[(Long, Array[Byte])] = None
     val ok = walk(b, p, e) { (typ, p2, e2) =>
       if (typ == "data" && e2 - p2 >= 8) {
-        found = Some((u32(b, p2),
+        found = Some((Bytes.u32be(b, p2),
           java.util.Arrays.copyOfRange(b, (p2 + 8).toInt, e2.toInt)))
         false
       } else true
@@ -280,9 +271,8 @@ object VideoHeaders {
             else if (tagIs(b, o + 4, 't', 'r', 'k', 'n'))
               dataOf(b, p2, e2) match {
                 case Some((0L, bytes)) if bytes.length >= 6 =>
-                  track = Some(((bytes(2) & 0xff) << 8) | (bytes(3) & 0xff))
-                  trackTotal =
-                    Some(((bytes(4) & 0xff) << 8) | (bytes(5) & 0xff))
+                  track = Some(Bytes.u16be(bytes, 2))
+                  trackTotal = Some(Bytes.u16be(bytes, 4))
                 case _ => ()
               }
             o = e2
@@ -349,10 +339,6 @@ object VideoHeaders {
     val metaBox = 8 + 4 + hdlrBox + ilstBox
     val udtaBox = 8 + metaBox
     val out = new ByteArrayOutputStream(plain.length + udtaBox)
-    def be32(v: Long): Unit = {
-      out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-    }
     def cc(s: String): Unit = out.write(s.getBytes("US-ASCII"), 0, 4)
     // copy everything, then grow the trailing moov by udtaBox. The
     // moov box is the LAST top-level box in encodeMp4's layout, so its
@@ -360,33 +346,23 @@ object VideoHeaders {
     out.write(plain, 0, plain.length)
     val bytes = out.toByteArray
     val moovAt = 24 + 8 + note.length
-    val moovSize = ((bytes(moovAt) & 0xff) << 24) |
-      ((bytes(moovAt + 1) & 0xff) << 16) |
-      ((bytes(moovAt + 2) & 0xff) << 8) | (bytes(moovAt + 3) & 0xff)
-    val grown = moovSize.toLong + udtaBox
-    bytes(moovAt) = ((grown >> 24) & 0xff).toByte
-    bytes(moovAt + 1) = ((grown >> 16) & 0xff).toByte
-    bytes(moovAt + 2) = ((grown >> 8) & 0xff).toByte
-    bytes(moovAt + 3) = (grown & 0xff).toByte
+    Bytes.putBe32(bytes, moovAt, Bytes.i32be(bytes, moovAt).toLong + udtaBox)
     val tail = new ByteArrayOutputStream(udtaBox)
-    def tb32(v: Long): Unit = {
-      tail.write(((v >> 24) & 0xff).toInt); tail.write(((v >> 16) & 0xff).toInt)
-      tail.write(((v >> 8) & 0xff).toInt); tail.write((v & 0xff).toInt)
-    }
     def tcc(s: String): Unit = tail.write(s.getBytes("US-ASCII"), 0, 4)
-    tb32(udtaBox.toLong); tcc("udta")
-    tb32(metaBox.toLong); tcc("meta"); tb32(0) // fullbox ver/flags
-    tb32(hdlrBox.toLong); tcc("hdlr"); tb32(0); tb32(0); tcc("mdir")
+    Bytes.be32(tail, udtaBox.toLong); tcc("udta")
+    Bytes.be32(tail, metaBox.toLong); tcc("meta"); Bytes.be32(tail, 0) // fullbox ver/flags
+    Bytes.be32(tail, hdlrBox.toLong); tcc("hdlr")
+    Bytes.be32(tail, 0); Bytes.be32(tail, 0); tcc("mdir")
     tail.write(new Array[Byte](12), 0, 12); tail.write(0) // empty name
-    tb32(ilstBox.toLong); tcc("ilst")
+    Bytes.be32(tail, ilstBox.toLong); tcc("ilst")
     texts.foreach { case (tag, payload) =>
-      tb32(24L + payload.length); tail.write(tag, 0, 4)
-      tb32(16L + payload.length); tcc("data")
-      tb32(1L); tb32(0L) // UTF-8 type, locale
+      Bytes.be32(tail, 24L + payload.length); tail.write(tag, 0, 4)
+      Bytes.be32(tail, 16L + payload.length); tcc("data")
+      Bytes.be32(tail, 1L); Bytes.be32(tail, 0L) // UTF-8 type, locale
       tail.write(payload, 0, payload.length)
     }
-    tb32(32L); tcc("trkn")
-    tb32(24L); tcc("data"); tb32(0L); tb32(0L)
+    Bytes.be32(tail, 32L); tcc("trkn")
+    Bytes.be32(tail, 24L); tcc("data"); Bytes.be32(tail, 0L); Bytes.be32(tail, 0L)
     tail.write(0); tail.write(0)
     tail.write((track >> 8) & 0xff); tail.write(track & 0xff)
     tail.write((trackTotal >> 8) & 0xff); tail.write(trackTotal & 0xff)
@@ -428,7 +404,7 @@ object VideoHeaders {
         if (t == "ispe") {
           // fullbox: version/flags u32, then width/height u32 BE
           if (e2 - p2 < 12) bad = true
-          else { width = u32(b, p2 + 4); height = u32(b, p2 + 8); sawIspe = true }
+          else { width = Bytes.u32be(b, p2 + 4); height = Bytes.u32be(b, p2 + 8); sawIspe = true }
         } else if (t == "pixi") {
           // fullbox: version/flags, u8 channel count, u8 bits each
           if (e2 - p2 < 6) bad = true
@@ -474,25 +450,22 @@ object VideoHeaders {
     require(width >= 1 && height >= 1, s"dims must be positive: ${width}x$height")
     require(depth >= 1 && depth <= 255, "pixi bits are u8")
     val out = new ByteArrayOutputStream(note.length + 144)
-    def be32(v: Long): Unit = {
-      out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-    }
     def cc(s: String): Unit = out.write(s.getBytes("US-ASCII"), 0, 4)
-    be32(24); cc("ftyp"); cc(brand); be32(0); cc("mif1"); cc("miaf")
-    be32(8L + note.length); cc("free"); out.write(note, 0, note.length)
+    Bytes.be32(out, 24); cc("ftyp"); cc(brand); Bytes.be32(out, 0); cc("mif1"); cc("miaf")
+    Bytes.be32(out, 8L + note.length); cc("free"); out.write(note, 0, note.length)
     val ispeBox = 8 + 12
     val pixiBox = 8 + 4 + 1 + 3 // fullbox + channel count + 3 channels
     val ipcoBox = 8 + ispeBox + pixiBox
     val iprpBox = 8 + ipcoBox
     val hdlrBox = 8 + 4 + 4 + 4 + 12 + 1 // fullbox, pre_def, type, resv, name
-    be32(8L + 4 + hdlrBox + iprpBox); cc("meta"); be32(0) // fullbox ver/flags
-    be32(hdlrBox); cc("hdlr"); be32(0); be32(0); cc("pict")
+    Bytes.be32(out, 8L + 4 + hdlrBox + iprpBox); cc("meta"); Bytes.be32(out, 0) // fullbox ver/flags
+    Bytes.be32(out, hdlrBox); cc("hdlr"); Bytes.be32(out, 0); Bytes.be32(out, 0); cc("pict")
     out.write(new Array[Byte](12), 0, 12); out.write(0) // empty name
-    be32(iprpBox); cc("iprp")
-    be32(ipcoBox); cc("ipco")
-    be32(ispeBox); cc("ispe"); be32(0); be32(width.toLong); be32(height.toLong)
-    be32(pixiBox); cc("pixi"); be32(0); out.write(3)
+    Bytes.be32(out, iprpBox); cc("iprp")
+    Bytes.be32(out, ipcoBox); cc("ipco")
+    Bytes.be32(out, ispeBox); cc("ispe"); Bytes.be32(out, 0)
+    Bytes.be32(out, width.toLong); Bytes.be32(out, height.toLong)
+    Bytes.be32(out, pixiBox); cc("pixi"); Bytes.be32(out, 0); out.write(3)
     out.write(depth); out.write(depth); out.write(depth)
     out.toByteArray
   }
@@ -500,9 +473,6 @@ object VideoHeaders {
   // ------------------------------------------------------------------
   // HEIF item-level resolution (round 16): pitm → ipma → ipco
   // ------------------------------------------------------------------
-
-  private def u16(b: Array[Byte], i: Long): Int =
-    ((b(i.toInt) & 0xff) << 8) | (b(i.toInt + 1) & 0xff)
 
   /** The PRIMARY item's dims plus the item/property inventory. */
   final case class AvifItems(format: String, primaryWidth: Long,
@@ -536,14 +506,14 @@ object VideoHeaders {
     def parseIpma(p: Long, e: Long): Unit = {
       if (e - p < 8) { bad = true; return }
       val ver = b(p.toInt) & 0xff
-      val wide = (u32(b, p) & 1L) == 1L // flags bit 0: 15-bit indexes
-      val entries = u32(b, p + 4)
+      val wide = (Bytes.u32be(b, p) & 1L) == 1L // flags bit 0: 15-bit indexes
+      val entries = Bytes.u32be(b, p + 4)
       var o = p + 8
       var i = 0L
       val out = Map.newBuilder[Long, Vector[Int]]
       while (i < entries) {
         if (o + (if (ver < 1) 3 else 5) > e) { bad = true; return }
-        val id = if (ver < 1) u16(b, o).toLong else u32(b, o)
+        val id = if (ver < 1) Bytes.u16be(b, o).toLong else Bytes.u32be(b, o)
         o += (if (ver < 1) 2 else 4)
         val cnt = b(o.toInt) & 0xff
         o += 1
@@ -552,7 +522,7 @@ object VideoHeaders {
         while (j < cnt) {
           if (wide) {
             if (o + 2 > e) { bad = true; return }
-            ixs += u16(b, o) & 0x7fff
+            ixs += Bytes.u16be(b, o) & 0x7fff
             o += 2
           } else {
             if (o + 1 > e) { bad = true; return }
@@ -578,8 +548,8 @@ object VideoHeaders {
                 else {
                   val ver = b(p2.toInt) & 0xff
                   pitm =
-                    if (ver < 1) u16(b, p2 + 4).toLong
-                    else if (e2 - p2 >= 8) u32(b, p2 + 4)
+                    if (ver < 1) Bytes.u16be(b, p2 + 4).toLong
+                    else if (e2 - p2 >= 8) Bytes.u32be(b, p2 + 4)
                     else { bad = true; -1L }
                 }
               case "iinf" =>
@@ -587,8 +557,8 @@ object VideoHeaders {
                 else {
                   val ver = b(p2.toInt) & 0xff
                   val n =
-                    if (ver < 1) u16(b, p2 + 4).toLong
-                    else if (e2 - p2 >= 8) u32(b, p2 + 4)
+                    if (ver < 1) Bytes.u16be(b, p2 + 4).toLong
+                    else if (e2 - p2 >= 8) Bytes.u32be(b, p2 + 4)
                     else { bad = true; -1L }
                   if (n > 100000) bad = true else nItems = n.toInt
                 }
@@ -622,8 +592,8 @@ object VideoHeaders {
       val (t, p, e) = props(ix - 1)
       if (t == "ispe" && w < 0) {
         if (e - p < 12) return None
-        w = u32(b, p + 4)
-        h = u32(b, p + 8)
+        w = Bytes.u32be(b, p + 4)
+        h = Bytes.u32be(b, p + 8)
       }
     }
     if (w <= 0 || h <= 0) return None
@@ -642,13 +612,8 @@ object VideoHeaders {
     require(brand.length == 4 && HeifBrands.contains(brand), brand)
     require(nItems >= 2 && nItems <= 200, "items incl. the thumbnail")
     val out = new ByteArrayOutputStream(512)
-    def be32(v: Long): Unit = {
-      out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-    }
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
     def cc(s: String): Unit = out.write(s.getBytes("US-ASCII"), 0, 4)
-    be32(24); cc("ftyp"); cc(brand); be32(0); cc("mif1"); cc("miaf")
+    Bytes.be32(out, 24); cc("ftyp"); cc(brand); Bytes.be32(out, 0); cc("mif1"); cc("miaf")
     val hdlrBox = 8 + 4 + 4 + 4 + 12 + 1
     val pitmBox = 8 + 4 + (if (widePitm) 4 else 2)
     val infeBox = 8 + 4 + 2 + 2 + 4 + 5 // v2: ids, type, "itemN\0"-ish
@@ -661,41 +626,41 @@ object VideoHeaders {
     val aw = if (wideAssoc) 2 else 1
     val ipmaBox = 8 + 4 + 4 + (2 + 1 + 2 * aw) + (2 + 1 + 1 * aw)
     val iprpBox = 8 + ipcoBox + ipmaBox
-    be32(8L + 4 + hdlrBox + pitmBox + iinfBox + iprpBox); cc("meta")
-    be32(0) // meta fullbox version/flags
-    be32(hdlrBox); cc("hdlr"); be32(0); be32(0); cc("pict")
+    Bytes.be32(out, 8L + 4 + hdlrBox + pitmBox + iinfBox + iprpBox); cc("meta")
+    Bytes.be32(out, 0) // meta fullbox version/flags
+    Bytes.be32(out, hdlrBox); cc("hdlr"); Bytes.be32(out, 0); Bytes.be32(out, 0); cc("pict")
     out.write(new Array[Byte](12), 0, 12); out.write(0)
-    be32(pitmBox); cc("pitm")
-    if (widePitm) { be32(0x01000000L); be32(1L) } // v1: u32 item id
-    else { be32(0); be16(1) } // v0: u16 item id
-    be32(iinfBox); cc("iinf"); be32(0); be16(nItems)
+    Bytes.be32(out, pitmBox); cc("pitm")
+    if (widePitm) { Bytes.be32(out, 0x01000000L); Bytes.be32(out, 1L) } // v1: u32 item id
+    else { Bytes.be32(out, 0); Bytes.be16(out, 1) } // v0: u16 item id
+    Bytes.be32(out, iinfBox); cc("iinf"); Bytes.be32(out, 0); Bytes.be16(out, nItems)
     var i = 0
     while (i < nItems) {
-      be32(infeBox); cc("infe"); be32(0x02000000L) // infe version 2
-      be16(i + 1); be16(0) // item id, protection
+      Bytes.be32(out, infeBox); cc("infe"); Bytes.be32(out, 0x02000000L) // infe version 2
+      Bytes.be16(out, i + 1); Bytes.be16(out, 0) // item id, protection
       cc(if (i == 0) "av01" else "thmb")
       out.write(('a' + (i % 26)).toChar); out.write(0) // short name
       out.write(0); out.write(0); out.write(0) // pad to the fixed size
       i += 1
     }
-    be32(iprpBox); cc("iprp")
-    be32(ipcoBox); cc("ipco")
-    be32(ispeBox); cc("ispe"); be32(0) // property 1: the THUMB decoy
-    be32(thumbW.toLong); be32(thumbH.toLong)
-    be32(pixiBox); cc("pixi"); be32(0); out.write(3) // property 2
+    Bytes.be32(out, iprpBox); cc("iprp")
+    Bytes.be32(out, ipcoBox); cc("ipco")
+    Bytes.be32(out, ispeBox); cc("ispe"); Bytes.be32(out, 0) // property 1: the THUMB decoy
+    Bytes.be32(out, thumbW.toLong); Bytes.be32(out, thumbH.toLong)
+    Bytes.be32(out, pixiBox); cc("pixi"); Bytes.be32(out, 0); out.write(3) // property 2
     out.write(8); out.write(8); out.write(8)
-    be32(ispeBox); cc("ispe"); be32(0) // property 3: the primary
-    be32(width.toLong); be32(height.toLong)
-    be32(ipmaBox); cc("ipma")
-    be32(if (wideAssoc) 1L else 0L) // version 0; flags bit0 = wide
-    be32(2L) // entry_count
+    Bytes.be32(out, ispeBox); cc("ispe"); Bytes.be32(out, 0) // property 3: the primary
+    Bytes.be32(out, width.toLong); Bytes.be32(out, height.toLong)
+    Bytes.be32(out, ipmaBox); cc("ipma")
+    Bytes.be32(out, if (wideAssoc) 1L else 0L) // version 0; flags bit0 = wide
+    Bytes.be32(out, 2L) // entry_count
     def assocIx(essential: Boolean, ix: Int): Unit =
-      if (wideAssoc) be16((if (essential) 0x8000 else 0) | ix)
+      if (wideAssoc) Bytes.be16(out, (if (essential) 0x8000 else 0) | ix)
       else out.write((if (essential) 0x80 else 0) | ix)
-    be16(1); out.write(2) // primary item: 2 associations
+    Bytes.be16(out, 1); out.write(2) // primary item: 2 associations
     assocIx(essential = true, 3) // its ispe is property THREE
     assocIx(essential = false, 2)
-    be16(2); out.write(1) // thumbnail item: 1 association
+    Bytes.be16(out, 2); out.write(1) // thumbnail item: 1 association
     assocIx(essential = false, 1)
     out.toByteArray
   }

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
+import graft.codec.Bytes
 import graft.engine.Tables
 
 /** XZ container + LZMA2/LZMA DECODER — pure JVM, from spec.
@@ -85,32 +86,10 @@ object XzCodec {
     ~c
   }
 
-  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32
-    c.update(b, off, len)
-    c.getValue
-  }
-
   // ------------------------------------------------------------------
-  // little-endian reads + the xz variable-length integer (section 1.2:
+  // the xz variable-length integer (section 1.2:
   // 7 bits per byte, 0x80 continuation, max 9 bytes, minimal encoding)
   // ------------------------------------------------------------------
-
-  private def u16be(b: Array[Byte], i: Int): Int = {
-    if (i + 2 > b.length) fail()
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  }
-
-  private def u32le(b: Array[Byte], i: Int): Long = {
-    if (i + 4 > b.length) fail()
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  }
-
-  private def u64le(b: Array[Byte], i: Int): Long = {
-    if (i + 8 > b.length) fail()
-    u32le(b, i) | (u32le(b, i + 4) << 32)
-  }
 
   private def vli(b: Array[Byte], off: Int): (Long, Int) = {
     var v = 0L
@@ -428,8 +407,8 @@ object XzCodec {
           out.dictStart = out.len
         } else if (needDictReset) fail()
         if (control >= 0x80) {
-          val unpacked = ((control & 0x1f) << 16) + u16be(b, i + 1) + 1
-          val packed = u16be(b, i + 3) + 1
+          val unpacked = ((control & 0x1f) << 16) + Bytes.u16be(b, i + 1) + 1
+          val packed = Bytes.u16be(b, i + 3) + 1
           var p = i + 5
           if (control >= 0xc0) {
             if (p >= b.length) fail()
@@ -456,7 +435,7 @@ object XzCodec {
           i = p + packed
         } else {
           if (control > 0x02) fail()
-          val size = u16be(b, i + 1) + 1
+          val size = Bytes.u16be(b, i + 1) + 1
           if (i + 3 + size > b.length) fail()
           out.append(b, i + 3, size)
           i += 3 + size
@@ -537,7 +516,7 @@ object XzCodec {
       fk += 1
     }
     while (p < off + hdrSize - 4) { if (b(p) != 0) fail(); p += 1 }
-    if (crc32(b, off, hdrSize - 4) != u32le(b, off + hdrSize - 4)) fail()
+    if (Bytes.crc32(b, off, hdrSize - 4) != Bytes.u32le(b, off + hdrSize - 4)) fail()
     val dataOff = off + hdrSize
     val outStart = out.len
     val dataEnd = decodeLzma2(b, dataOff, out, dictSize)
@@ -557,9 +536,9 @@ object XzCodec {
     checkType match {
       case 0 =>
       case 1 =>
-        if (crc32(out.buf, outStart, out.len - outStart) != u32le(b, q)) fail()
+        if (Bytes.crc32(out.buf, outStart, out.len - outStart) != Bytes.u32le(b, q)) fail()
       case 4 =>
-        if (crc64(out.buf, outStart, out.len - outStart) != u64le(b, q)) fail()
+        if (crc64(out.buf, outStart, out.len - outStart) != Bytes.u64le(b, q)) fail()
       case 10 =>
         val md = java.security.MessageDigest.getInstance("SHA-256")
         md.update(out.buf, outStart, out.len - outStart)
@@ -581,7 +560,7 @@ object XzCodec {
     val checkType = b(i + 7) & 0xff
     if ((checkType & 0xf0) != 0) fail()
     val checkSz = checkSizeOf(checkType)
-    if (crc32(b, i + 6, 2) != u32le(b, i + 8)) fail()
+    if (Bytes.crc32(b, i + 6, 2) != Bytes.u32le(b, i + 8)) fail()
     i += 12
     var records = Vector.empty[(Long, Long)]
     while ({ if (i >= b.length) fail(); b(i) != 0 }) {
@@ -605,13 +584,13 @@ object XzCodec {
       if (i >= b.length || b(i) != 0) fail()
       i += 1
     }
-    if (crc32(b, idxStart, i - idxStart) != u32le(b, i)) fail()
+    if (Bytes.crc32(b, idxStart, i - idxStart) != Bytes.u32le(b, i)) fail()
     i += 4
     val indexSize = i - idxStart
     // footer: CRC32(backward+flags), backward size, flags, "YZ"
     if (i + 12 > b.length) fail()
-    if (crc32(b, i + 4, 6) != u32le(b, i)) fail()
-    if ((u32le(b, i + 4) + 1) * 4 != indexSize) fail()
+    if (Bytes.crc32(b, i + 4, 6) != Bytes.u32le(b, i)) fail()
+    if ((Bytes.u32le(b, i + 4) + 1) * 4 != indexSize) fail()
     if (b(i + 8) != 0 || (b(i + 9) & 0xff) != checkType) fail()
     if (b(i + 10) != 'Y' || b(i + 11) != 'Z') fail()
     i + 12
@@ -752,11 +731,6 @@ object XzCodec {
     out.toByteArray
   }
 
-  private def writeU32le(out: ByteArrayOutputStream, v: Long): Unit = {
-    var k = 0
-    while (k < 4) { out.write(((v >>> (8 * k)) & 0xff).toInt); k += 1 }
-  }
-
   private def writeVli(out: ByteArrayOutputStream, v0: Long): Unit = {
     var v = v0
     var more = true
@@ -776,7 +750,7 @@ object XzCodec {
     out.write(Array[Byte](0xfd.toByte, '7', 'z', 'X', 'Z', 0), 0, 6)
     val flags = Array[Byte](0, checkType.toByte)
     out.write(flags, 0, 2)
-    writeU32le(out, crc32(flags, 0, 2))
+    Bytes.le32(out, Bytes.crc32(flags, 0, 2))
     val checkSz = checkSizeOf(checkType)
     var records = Vector.empty[(Long, Long)]
     if (data.nonEmpty) {
@@ -789,7 +763,7 @@ object XzCodec {
       val hb = hdr.toByteArray
       hb(0) = ((hb.length + 4) / 4 - 1).toByte
       out.write(hb, 0, hb.length)
-      writeU32le(out, crc32(hb, 0, hb.length))
+      Bytes.le32(out, Bytes.crc32(hb, 0, hb.length))
       val filtered = if (deltaDist > 0) deltaEncode(data, deltaDist) else data
       val comp = if (literal) lzma2Literal(filtered) else lzma2Stored(filtered)
       out.write(comp, 0, comp.length)
@@ -797,10 +771,10 @@ object XzCodec {
       while (pad > 0) { out.write(0); pad -= 1 }
       checkType match {
         case 0 =>
-        case 1 => writeU32le(out, crc32(data, 0, data.length))
+        case 1 => Bytes.le32(out, Bytes.crc32(data, 0, data.length))
         case 4 =>
           val c = crc64(data, 0, data.length)
-          writeU32le(out, c & 0xffffffffL); writeU32le(out, c >>> 32)
+          Bytes.le32(out, c & 0xffffffffL); Bytes.le32(out, c >>> 32)
         case 10 =>
           val md = java.security.MessageDigest.getInstance("SHA-256")
           val dig = md.digest(data)
@@ -816,12 +790,12 @@ object XzCodec {
     while (idx.size % 4 != 0) idx.write(0)
     val ib = idx.toByteArray
     out.write(ib, 0, ib.length)
-    writeU32le(out, crc32(ib, 0, ib.length))
+    Bytes.le32(out, Bytes.crc32(ib, 0, ib.length))
     val tail = new ByteArrayOutputStream(8)
-    writeU32le(tail, (ib.length + 4).toLong / 4 - 1)
+    Bytes.le32(tail, (ib.length + 4).toLong / 4 - 1)
     tail.write(flags, 0, 2)
     val tb = tail.toByteArray
-    writeU32le(out, crc32(tb, 0, tb.length))
+    Bytes.le32(out, Bytes.crc32(tb, 0, tb.length))
     out.write(tb, 0, tb.length)
     out.write('Y'); out.write('Z')
     out.toByteArray
@@ -848,8 +822,8 @@ object XzCodec {
       val lcv = props % 9
       val lpv = (props / 9) % 5
       val pbv = props / 45
-      val dictSize = math.max(u32le(b, 1), 4096L)
-      val declared = u64le(b, 5)
+      val dictSize = math.max(Bytes.u32le(b, 1), 4096L)
+      val declared = Bytes.u64le(b, 5)
       val known = declared != -1L
       if (known && (declared < 0 || declared > maxOut)) return None
       val out = new OutBuf(maxOut)

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.codec.Bytes
+
 /** zstd frame DECODER (RFC 8878, no-dictionary) — pure JVM, from spec.
   *
   * Round 11 left the ingestion chain end-to-end for .warc.gz but
@@ -51,14 +53,6 @@ object ZstdCodec {
     val P3 = 0x165667b19e3779f9L; val P4 = 0x85ebca77c2b2ae63L
     val P5 = 0x27d4eb2f165667c5L
     def rotl(x: Long, r: Int): Long = (x << r) | (x >>> (64 - r))
-    def u64(i: Int): Long = {
-      var v = 0L; var k = 0
-      while (k < 8) { v |= (b(i + k) & 0xffL) << (8 * k); k += 1 }
-      v
-    }
-    def u32(i: Int): Long =
-      (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-        ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
     var i = off
     val end = off + len
     var h =
@@ -66,10 +60,10 @@ object ZstdCodec {
         var v1 = seed + P1 + P2; var v2 = seed + P2
         var v3 = seed; var v4 = seed - P1
         while (i <= end - 32) {
-          v1 = rotl(v1 + u64(i) * P2, 31) * P1
-          v2 = rotl(v2 + u64(i + 8) * P2, 31) * P1
-          v3 = rotl(v3 + u64(i + 16) * P2, 31) * P1
-          v4 = rotl(v4 + u64(i + 24) * P2, 31) * P1
+          v1 = rotl(v1 + Bytes.u64le(b, i) * P2, 31) * P1
+          v2 = rotl(v2 + Bytes.u64le(b, i + 8) * P2, 31) * P1
+          v3 = rotl(v3 + Bytes.u64le(b, i + 16) * P2, 31) * P1
+          v4 = rotl(v4 + Bytes.u64le(b, i + 24) * P2, 31) * P1
           i += 32
         }
         var acc = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
@@ -81,9 +75,9 @@ object ZstdCodec {
       } else seed + P5
     h += len
     while (i <= end - 8) {
-      h = rotl(h ^ (rotl(u64(i) * P2, 31) * P1), 27) * P1 + P4; i += 8
+      h = rotl(h ^ (rotl(Bytes.u64le(b, i) * P2, 31) * P1), 27) * P1 + P4; i += 8
     }
-    if (i <= end - 4) { h = rotl(h ^ (u32(i) * P1), 23) * P2 + P3; i += 4 }
+    if (i <= end - 4) { h = rotl(h ^ (Bytes.u32le(b, i) * P1), 23) * P2 + P3; i += 4 }
     while (i < end) {
       h = rotl(h ^ ((b(i) & 0xffL) * P5), 11) * P1; i += 1
     }
@@ -527,9 +521,8 @@ object ZstdCodec {
           hufDecodeStream(b, streamOff, streamEnd, table, regen, lit, 0)
         } else {
           if (streamEnd - streamOff < 6) fail()
-          def u16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-          val s1 = u16(streamOff); val s2 = u16(streamOff + 2)
-          val s3 = u16(streamOff + 4)
+          val s1 = Bytes.u16le(b, streamOff); val s2 = Bytes.u16le(b, streamOff + 2)
+          val s3 = Bytes.u16le(b, streamOff + 4)
           val dataOff = streamOff + 6
           val total = streamEnd - dataOff
           val s4 = total - s1 - s2 - s3
@@ -738,8 +731,7 @@ object ZstdCodec {
       dict: Option[ZstdDict] = None): Option[(Array[Byte], Int)] = {
     if (b == null || off0 < 0 || off0 + 8 > b.length) return None
     try {
-      val magic = (b(off0) & 0xffL) | ((b(off0 + 1) & 0xffL) << 8) |
-        ((b(off0 + 2) & 0xffL) << 16) | ((b(off0 + 3) & 0xffL) << 24)
+      val magic = Bytes.u32le(b, off0)
       if ((magic & 0xfffffff0L) == 0x184d2a50L) { // skippable frame
         var sz = 0L
         var i = 0
@@ -762,8 +754,7 @@ object ZstdCodec {
       var last = false
       while (!last) {
         if (off + 3 > b.length) fail()
-        val hdr = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-          ((b(off + 2) & 0xff) << 16)
+        val hdr = Bytes.u24le(b, off)
         last = (hdr & 1) != 0
         val btype = (hdr >> 1) & 3
         val bsize = hdr >> 3
@@ -789,8 +780,7 @@ object ZstdCodec {
       meta.contentSize.foreach(cs => if (cs != out.produced.toLong) fail())
       if (meta.checksum) {
         if (off + 4 > b.length) fail()
-        val want = (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-          ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
+        val want = Bytes.u32le(b, off)
         val got = xxh64(out.buf, out.base, out.produced) & 0xffffffffL
         if (want != got) fail()
         off += 4
@@ -825,10 +815,7 @@ object ZstdCodec {
     * structurally torn STRUCTURED dict. */
   def parseDict(b: Array[Byte]): Option[ZstdDict] = {
     if (b == null || b.length == 0) return None
-    val magic = if (b.length >= 4)
-      (b(0) & 0xffL) | ((b(1) & 0xffL) << 8) |
-        ((b(2) & 0xffL) << 16) | ((b(3) & 0xffL) << 24)
-    else 0L
+    val magic = if (b.length >= 4) Bytes.u32le(b, 0) else 0L
     if (magic != 0xec30a437L)
       return Some(new ZstdDict(0L, false, null, null, null, null,
         Array(1L, 4L, 8L), b.clone()))
@@ -926,8 +913,7 @@ object ZstdCodec {
 
   private def isSkippable(b: Array[Byte], off: Int): Boolean =
     off + 4 <= b.length && {
-      val m = (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-        ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
+      val m = Bytes.u32le(b, off)
       (m & 0xfffffff0L) == 0x184d2a50L
     }
 

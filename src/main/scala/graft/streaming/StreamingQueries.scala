@@ -150,8 +150,12 @@ object StreamingQueries {
           .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
             !st.getPath.getName.startsWith("."))
           .map { st =>
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-              dst, s"b${k}_${st.getPath.getName}"))
+            // rename reports failure by returning false: a dropped
+            // file would silently lose the arrival's rows, so fail
+            val to = new org.apache.hadoop.fs.Path(dst, s"b${k}_${st.getPath.getName}")
+            if (!fs.rename(st.getPath, to))
+              throw new java.io.IOException(
+                s"arrival $k: could not move ${st.getPath} to $to")
           }.size
       // an EMPTY batch must still deliver one schema-bearing empty file:
       // the per-batch write pattern this replaces did (Spark writes one
